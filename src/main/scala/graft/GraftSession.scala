@@ -5,24 +5,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session factory + test-table loaders.
   *
   * Scale posture: AQE on (runtime re-plan, skew-join splitting,
-  * partition coalescing), shuffle partitions sized by env (32 on the
-  * local[32] harness; on a real cluster this scales with executor
-  * count). All loaders are plain parquet scans so Catalyst pushes
-  * filters/projections into the reader.
+  * partition coalescing), one shuffle partition per thread of a local
+  * master (on a real cluster Spark's own setting applies). All loaders
+  * are plain parquet scans so Catalyst pushes filters/projections into
+  * the reader.
   */
 object GraftSession {
 
+  /** The one session factory: every main and the test suite build
+    * their session here.
+    */
   def build(appName: String = "graft", master: String = "local[*]"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession
+    val builder = SparkSession
       .builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    localThreads(master).foreach(n => builder.config("spark.sql.shuffle.partitions", n))
+    builder.getOrCreate()
+  }
+
+  private val LocalN = """local\[(\d+|\*)\]""".r
+
+  /** Worker threads of a `local[N]` or `local[*]` master. */
+  private def localThreads(master: String): Option[Long] = master match {
+    case LocalN("*") => Some(Runtime.getRuntime.availableProcessors().toLong)
+    case LocalN(n) => Some(n.toLong)
+    case _ => None
   }
 
   /** All driver-generated test tables (TESTDATA.md). */

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.GraftSession.table
+import graft.queries.Q.dp6
 import graft.operators.VectorOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -159,8 +160,6 @@ object PinnacleQueries {
             && col("vec_id") =!= col("query_id"))
           .groupBy(col("query_id")).agg(count(lit(1)).as("n_rel"))
           .withColumn("idcg_w", element_at(cumArr, least(col("n_rel"), lit(10L)).cast("int")))
-        def dp6(c: org.apache.spark.sql.Column) =
-          floor(c * 1000000 + lit(0.5)) / 1000000
         m.join(nrel, Seq("query_id"))
           .select(col("query_id"), col("n_rel"),
             when(col("first_rel").isNotNull,
@@ -644,8 +643,6 @@ object PinnacleQueries {
           aggregate(transform(col("ths"),
             v => (v - col("thbar")) * (v - col("thbar"))),
             lit(0.0), (a, v) => a + v).as("ss"))
-      def dp6(c: org.apache.spark.sql.Column) =
-        floor(c * 1000000 + lit(0.5)) / 1000000
       val se = sqrt((col("bn") - 1).cast("double") / col("bn") * col("ss"))
       withBar.select(col("bn").as("n_buckets"),
         dp6(col("sy").cast("double") / col("sx")).as("theta"),
@@ -731,8 +728,6 @@ object PinnacleQueries {
             col("pbar") * (lit(1) - col("pbar")) / col("s2") - 1 > 0,
             col("pbar") * (lit(1) - col("pbar")) / col("s2") - 1)
             .otherwise(lit(0.0)).as("mm"))
-      def dp6(c: org.apache.spark.sql.Column) =
-        floor(c * 1000000 + lit(0.5)) / 1000000
       sg.crossJoin(broadcast(m))
         .select(col("seg"), col("n"), col("y"),
           dp6(col("y").cast("double") / col("n")).as("raw_rate"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.GraftSession.table
+import graft.queries.Q.dp6
 import graft.operators.VectorOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -735,8 +736,6 @@ object PinnacleQueries2 {
         .select((aggregate(transform(col("ms"),
           v => (v - col("mbar")) * (v - col("mbar"))),
           lit(0.0), (a, v) => a + v) / 31).as("v"))
-      def dp6(c: org.apache.spark.sql.Column) =
-        floor(c * 1000000 + lit(0.5)) / 1000000
       broadcast(base).crossJoin(broadcast(folded))
         .select(col("n").as("n_orders"),
           dp6(col("s").cast("double") / col("n")).as("theta"),
@@ -798,8 +797,6 @@ object PinnacleQueries2 {
       def cell(g: Int, p: Int) =
         max(when(col("grp") === g && col("post") === p,
           col("s").cast("double") / col("n")))
-      def dp6(x: org.apache.spark.sql.Column) =
-        floor(x * 1000000 + lit(0.5)) / 1000000
       c.agg(cell(1, 1).as("t1"), cell(1, 0).as("t0"),
           cell(0, 1).as("c1"), cell(0, 0).as("c0"),
           sum(col("n")).as("n_events"))
@@ -1514,8 +1511,6 @@ object PinnacleQueries2 {
           / (sqrt(sum(col("dy") * col("dy")).cast("double"))
              * sqrt(sum(col("dz") * col("dz")).cast("double")))).as("ryz"),
         count(lit(1)).as("n"))
-      def dp6(c: org.apache.spark.sql.Column) =
-        floor(c * 1000000 + lit(0.5)) / 1000000
       mm.select(col("n").as("n_days"),
         dp6(col("rxy")).as("r_xy"), dp6(col("rxz")).as("r_xz"),
         dp6(col("ryz")).as("r_yz"),

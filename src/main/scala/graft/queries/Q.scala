@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{floor, lit}
 
 /** One named engine query: the Spark implementation plus (when the
   * semantics are ANSI-SQL-expressible) an equivalent DuckDB oracle.
@@ -21,4 +22,9 @@ object Q {
     Q(name, fn, Some(oracle))
   def rowsOnly(name: String)(fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, None)
+
+  /** Round half up to 6 decimals, spelled as the oracles spell it:
+    * floor(x · 10⁶ + 0.5) / 10⁶.
+    */
+  def dp6(c: Column): Column = floor(c * 1000000 + lit(0.5)) / 1000000
 }

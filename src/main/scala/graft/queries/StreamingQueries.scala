@@ -3,7 +3,8 @@ package graft.queries
 import graft.GraftSession
 import graft.GraftSession.table
 import graft.streaming.SessionPipeline
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.SessionPipeline.FoldEvent
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -1622,13 +1623,13 @@ object StreamingQueries {
     // D44: streaming prefix z-score anomaly gate — each event tested
     // against the running mean/σ of all PRIOR events of its type
     // (the live telemetry outlier monitor). A genuine ordered fold
-    // (what counts as "prior" is order-determined), so it rides the
-    // D23 buffered-fold machinery (SessionPipeline.statefulAnomalyFold)
-    // with the anomaly predicate in EXACT integer arithmetic — no
-    // doubles, no sqrt: (v·n − S)²·(n−1) > 9·n·(n·Q − S²), warm-up
-    // n ≥ 30. The oracle replays the identical prefix rule with
-    // per-type cumulative windows over exactly the rows below the
-    // final watermark (the D23 emission rule), products in HUGEINT.
+    // (what counts as "prior" is order-determined;
+    // SessionPipeline.statefulAnomalyFold) with the anomaly predicate
+    // in EXACT integer arithmetic — no doubles, no sqrt:
+    // (v·n − S)²·(n−1) > 9·n·(n·Q − S²), warm-up n ≥ 30. The oracle
+    // replays the identical prefix rule with per-type cumulative
+    // windows over exactly the rows below the final watermark,
+    // products in HUGEINT.
     Q("streaming_zscore_anomaly",
       s"""WITH e AS (
          |  SELECT event_type, event_id,
@@ -1658,19 +1659,9 @@ object StreamingQueries {
          |  CAST(sum(c) AS BIGINT) AS sum_cents
          |FROM a GROUP BY event_type""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val ev = eventStream(s, dir)
-        .select(col("event_type"), col("event_id"),
-          expr("ts div 1000000000").as("tsec"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .as[SessionPipeline.AnomEvent]
-      val folded = SessionPipeline.statefulAnomalyFold(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_zscore", mode = "update")
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("n_folded"), col("n_anomalies"),
-          col("sum_cents"))).as("m"))
-        .select(col("event_type"), col("m.n_folded").as("n_folded"),
-          col("m.n_anomalies").as("n_anomalies"),
-          col("m.sum_cents").as("sum_cents"))
+      latestFoldRows(s,
+        SessionPipeline.statefulAnomalyFold(centsByType(s, dir), DelayS),
+        "graft_stream_zscore", "event_type", "n_folded")
     },
 
     // D53: STREAMING CONFORMAL p-VALUE GATE (round 13) — the
@@ -1681,13 +1672,12 @@ object StreamingQueries {
     // over a BOUNDED 64-counter band histogram ($10 bands, clamped),
     // alarm at the exact integer test 16·(1+cnt_ge) ≤ n+1 after a
     // 30-event warm-up — valid under exchangeability alone, which a
-    // z-score on skewed telemetry is not. Ordered prefix fold on the
-    // D23/D44 buffered machinery; the oracle replays the prefix
-    // ranks via the bounded band-threshold UNION trick: each folded
-    // event emits one contrib row per band k ≤ its own, so
-    // cnt_ge(q) is a plain per-(type, band) running count with the
-    // query row sorted BEFORE its own contrib row (m ascending) —
-    // O(64·n) rows, no n² self-join.
+    // z-score on skewed telemetry is not. Ordered prefix fold; the
+    // oracle replays the prefix ranks via the bounded band-threshold
+    // UNION trick: each folded event emits one contrib row per band
+    // k ≤ its own, so cnt_ge(q) is a plain per-(type, band) running
+    // count with the query row sorted BEFORE its own contrib row
+    // (m ascending) — O(64·n) rows, no n² self-join.
     Q("streaming_conformal_gate",
       s"""WITH e AS (
          |  SELECT event_type, event_id,
@@ -1726,19 +1716,9 @@ object StreamingQueries {
          |    AS hi_mass
          |FROM a GROUP BY event_type""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val ev = eventStream(s, dir)
-        .select(col("event_type"), col("event_id"),
-          expr("ts div 1000000000").as("tsec"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .as[SessionPipeline.AnomEvent]
-      val folded = SessionPipeline.statefulConformalFold(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_conformal", mode = "update")
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("n_folded"), col("n_alarms"),
-          col("hi_mass"))).as("m"))
-        .select(col("event_type"), col("m.n_folded").as("n_folded"),
-          col("m.n_alarms").as("n_alarms"),
-          col("m.hi_mass").as("hi_mass"))
+      latestFoldRows(s,
+        SessionPipeline.statefulConformalFold(centsByType(s, dir), DelayS),
+        "graft_stream_conformal", "event_type", "n_folded")
     },
 
     // D54: STREAMING ISOTONIC CALIBRATION (round 13) — C155's PAVA
@@ -1881,8 +1861,8 @@ object StreamingQueries {
     // D47: streaming Page-Hinkley drift alarm — the classic online
     // mean-shift detector (Page 1954): per type, m_t = Σ(x_i − x̄_i),
     // PH_t = m_t − min_{i≤t} m_i (min incl. the initial 0), alarm at
-    // λ = 50 dollars. The running mean makes the fold ORDERED (D23/
-    // D44 machinery, SessionPipeline.statefulPageHinkley); FULLY
+    // λ = 50 dollars. The running mean makes the fold ORDERED
+    // (SessionPipeline.statefulPageHinkley); FULLY
     // exact integers — dev_e6 = c·10⁶ − (S·10⁶)//t is an integer
     // floor division, so m/min/PH replay bit-for-bit as prefix
     // windows over exactly the rows below the final watermark.
@@ -1920,26 +1900,16 @@ object StreamingQueries {
          |  CAST(count(*) FILTER (ph > 5000000000) AS BIGINT) AS n_alarms
          |FROM ph GROUP BY event_type""".stripMargin) { (s, dir) =>
       import s.implicits._
-      val ev = eventStream(s, dir)
-        .select(col("event_type"), col("event_id"),
-          expr("ts div 1000000000").as("tsec"),
-          floor(col("value") * 100 + lit(0.5)).cast("long").as("cents"))
-        .as[SessionPipeline.AnomEvent]
-      val folded = SessionPipeline.statefulPageHinkley(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_ph", mode = "update")
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("n_folded"), col("max_ph_e6"),
-          col("n_alarms"))).as("m"))
-        .select(col("event_type"), col("m.n_folded").as("n_folded"),
-          col("m.max_ph_e6").as("max_ph_e6"),
-          col("m.n_alarms").as("n_alarms"))
+      latestFoldRows(s,
+        SessionPipeline.statefulPageHinkley(centsByType(s, dir), DelayS),
+        "graft_stream_ph", "event_type", "n_folded")
     },
 
     // D48: streaming SPRT — Wald's sequential test run LIVE per
     // traffic shard (user_id % 4), freezing each shard's decision at
     // its first boundary crossing (the "stop the experiment early"
-    // monitor; batch twin B157). Ordered prefix fold on the D23/D44
-    // machinery (SessionPipeline.statefulSprt); LLR = exact-integer
+    // monitor; batch twin B157). Ordered prefix fold
+    // (SessionPipeline.statefulSprt); LLR = exact-integer
     // running counts × the SAME pinned log-literals as B157, so the
     // crossing replays bit-for-bit as prefix windows over exactly the
     // rows below the final watermark.
@@ -1983,21 +1953,13 @@ object StreamingQueries {
       (s, dir) =>
         import s.implicits._
         val ev = eventStream(s, dir)
-          .select((col("user_id") % 4).as("shard"), col("event_id"),
+          .select((col("user_id") % 4).as("key"), col("event_id"),
             expr("ts div 1000000000").as("tsec"),
-            when(col("event_type") === "purchase", lit(1)).otherwise(lit(0))
-              .cast("int").as("x"))
-          .as[SessionPipeline.SprtEvent]
-        val folded = SessionPipeline.statefulSprt(ev, DelayS).toDF()
-        runToMemory(s, folded, "graft_stream_sprt", mode = "update")
-          .groupBy(col("shard"))
-          .agg(max_by(struct(col("n_seen"), col("n1"), col("decision"),
-            col("n_at_decision"), col("n1_at_decision")), col("n_seen"))
-            .as("m"))
-          .select(col("shard"), col("m.n_seen").as("n_seen"),
-            col("m.n1").as("n1"), col("m.decision").as("decision"),
-            col("m.n_at_decision").as("n_at_decision"),
-            col("m.n1_at_decision").as("n1_at_decision"))
+            when(col("event_type") === "purchase", lit(1L)).otherwise(lit(0L))
+              .as("v"))
+          .as[FoldEvent[Long]]
+        latestFoldRows(s, SessionPipeline.statefulSprt(ev, DelayS),
+          "graft_stream_sprt", "shard", "n_seen")
     },
 
     // D49: streaming two-proportion z monitor — B167's pooled z-test
@@ -2373,11 +2335,8 @@ object StreamingQueries {
 
     // D23: streaming NON-DECOMPOSABLE ordered fold — B71's floored
     // running balance live (balance = max(0, balance + Δ): no partial
-    // agg, no prefix shortcut). Each key's deltas buffer in
-    // flatMapGroupsWithState state and fold in (tsec, event_id) order
-    // only once the watermark proves the prefix complete; the final
-    // update-mode row per key (max n_folded — the count is strictly
-    // monotone) must equal the batch fold over every delta strictly
+    // agg, no prefix shortcut). The final row per key (max
+    // n_folded) must equal the batch fold over every delta strictly
     // below the final watermark, which the oracle states directly.
     // Purchases credit, errors debit.
     Q("streaming_balance_fold",
@@ -2400,29 +2359,23 @@ object StreamingQueries {
       import s.implicits._
       val deltas = eventStream(s, dir)
         .filter(col("event_type").isin("purchase", "error"))
-        .select(col("user_id"), col("event_id"),
+        .select(col("user_id").as("key"), col("event_id"),
           expr("ts div 1000000000").as("tsec"),
           when(col("event_type") === "purchase",
             floor(col("value") * 100).cast("long"))
-            .otherwise(-floor(col("value") * 100).cast("long")).as("cents"))
-        .as[SessionPipeline.BalDelta]
-      val folded = SessionPipeline.statefulBalanceFold(deltas, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_balance", mode = "update")
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n_folded"), col("balance_cents"))).as("m"))
-        .select(col("user_id"), col("m.n_folded").as("n_folded"),
-          col("m.balance_cents").as("balance_cents"))
+            .otherwise(-floor(col("value") * 100).cast("long")).as("v"))
+        .as[FoldEvent[Long]]
+      latestFoldRows(s, SessionPipeline.statefulBalanceFold(deltas, DelayS),
+        "graft_stream_balance", "user_id", "n_folded")
     },
 
     // D41: STREAMING ROLLING DEBOUNCE — B119's cooldown rule over an
-    // out-of-order stream (the CDC noise gate running LIVE). The
-    // D23 machinery verbatim (`SessionPipeline.statefulDebounceFold`):
-    // survival depends on which earlier events survived — a genuine
-    // ordered non-decomposable fold — so each key buffers below-
-    // watermark rows in state and folds them in (tsec, event_id)
-    // order; the oracle replays the SAME recursive fold over exactly
-    // the rows below the final watermark (the D23 emission rule),
-    // and the kept id-SUM pins the exact surviving set.
+    // out-of-order stream (the CDC noise gate running LIVE;
+    // `SessionPipeline.statefulDebounceFold`): survival depends on
+    // which earlier events survived — a genuine ordered
+    // non-decomposable fold. The oracle replays the SAME recursive
+    // fold over exactly the rows below the final watermark, and the
+    // kept id-SUM pins the exact surviving set.
     Q("streaming_debounce",
       s"""WITH RECURSIVE e AS (
          |  SELECT user_id, event_id,
@@ -2455,17 +2408,11 @@ object StreamingQueries {
       (s, dir) =>
       import s.implicits._
       val ev = eventStream(s, dir)
-        .select(col("user_id"), col("event_id"),
-          expr("ts div 1000000000").as("tsec"))
-        .as[SessionPipeline.DebEvent]
-      val folded = SessionPipeline.statefulDebounceFold(ev, DelayS).toDF()
-      runToMemory(s, folded, "graft_stream_debounce", mode = "update")
-        .groupBy(col("user_id"))
-        .agg(max(struct(col("n_seen"), col("n_kept"), col("kept_id_sum")))
-          .as("m"))
-        .select(col("user_id"), col("m.n_seen").as("n_seen"),
-          col("m.n_kept").as("n_kept"),
-          col("m.kept_id_sum").as("kept_id_sum"))
+        .select(col("user_id").as("key"), col("event_id"),
+          expr("ts div 1000000000").as("tsec"), lit(0L).as("v"))
+        .as[FoldEvent[Long]]
+      latestFoldRows(s, SessionPipeline.statefulDebounceFold(ev, DelayS),
+        "graft_stream_debounce", "user_id", "n_seen")
     },
 
     // D37: STREAMING TIME-DECAYED COUNTS — the "trending now" shape
@@ -2843,6 +2790,31 @@ object StreamingQueries {
       .start()
     q.awaitTermination()
     spark.table(name)
+  }
+
+  /** The event stream as ordered-fold input: keyed by event type, the
+    * value in whole cents as payload.
+    */
+  private def centsByType(s: SparkSession, dir: String): Dataset[FoldEvent[String]] = {
+    import s.implicits._
+    eventStream(s, dir)
+      .select(col("event_type").as("key"), col("event_id"),
+        expr("ts div 1000000000").as("tsec"),
+        floor(col("value") * 100 + lit(0.5)).cast("long").as("v"))
+      .as[FoldEvent[String]]
+  }
+
+  /** Replays an ordered fold and keeps each key's latest running row:
+    * the one with the largest count `n`, which grows with every
+    * emission. By the fold's emission contract that row is the batch
+    * fold below the final watermark.
+    */
+  private def latestFoldRows(spark: SparkSession, folded: Dataset[_],
+      prefix: String, key: String, n: String): DataFrame = {
+    val rows = runToMemory(spark, folded.toDF(), prefix, mode = "update")
+    val fields = rows.columns.toSeq.filterNot(_ == key).map(col)
+    rows.groupBy(col(key)).agg(max_by(struct(fields: _*), col(n)).as("m"))
+      .select(col(key), col("m.*"))
   }
 
   // D2 under the gate: the custom flatMapGroupsWithState sessionizer

@@ -1,9 +1,9 @@
 package graft.streaming
 
-import graft.functions.GeoFunctions
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.collection.mutable.ArrayBuilder
 
 /** Structured Streaming re-expression of the reference pipeline
   * (SURVEY.md §2 A4, A5, D1-D4).
@@ -22,6 +22,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    sums + last point) instead of the reference's per-trip TreeSets
   *    — the difference between "fits in the state store at 100 TB"
   *    and "OOMs on a long trip".
+  *
+  * The six ordered folds (balance, debounce, z-score, conformal,
+  * Page-Hinkley, SPRT) run through one engine, [[OrderedFold]]. Its
+  * emission contract: each key's rows buffer in state until they are
+  * strictly below the watermark; ready rows fold in (tsec, event_id)
+  * order; every call that folds at least one row emits one running
+  * row (update mode). The accumulator is never dropped, so the final
+  * row per key equals the batch fold over that key's rows strictly
+  * below the final watermark, however the input is split into
+  * micro-batches and however it is reordered within the delay.
   */
 object SessionPipeline extends Serializable {
 
@@ -222,140 +232,109 @@ object SessionPipeline extends Serializable {
     events.withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(idCols)
 
-  case class BalDelta(user_id: Long, event_id: Long, tsec: Long, cents: Long)
-  case class BalState(balance: Long, nFolded: Long, buffered: Seq[BalDelta])
+  /** One event of an ordered fold: its key, event time, tie-break id
+    * and one integer payload (cents, a 0/1 outcome, or unused).
+    */
+  case class FoldEvent[K](key: K, event_id: Long, tsec: Long, v: Long)
+
+  /** Per-key state of an ordered fold: the accumulator, and the rows
+    * not yet folded as three parallel primitive arrays (tsec,
+    * event_id, payload). At the ×100 replay the whole corpus sits in
+    * this buffer for one batch; three `Array[Long]` blobs encode far
+    * cheaper than one product per buffered row.
+    */
+  case class FoldState(acc: Array[Long], bufT: Array[Long],
+      bufI: Array[Long], bufV: Array[Long])
+
+  /** Folds one event into the accumulator in place. A SAM trait rather
+    * than a Function4, so each per-event call passes unboxed longs.
+    */
+  trait FoldStep extends Serializable {
+    def apply(acc: Array[Long], tsec: Long, eventId: Long, v: Long): Unit
+  }
+
+  /** An ordered, non-decomposable per-key fold: a zero accumulator, a
+    * per-event step and the output row read off the accumulator. The
+    * step sees events in (tsec, event_id) order, so folds whose result
+    * depends on order (a floored balance, a prefix statistic, a
+    * frozen sequential decision) replay exactly. Applying it to a
+    * stream runs the emission contract in the header. A key with rows
+    * still buffered arms an event-time timer at max(min buffered
+    * tsec·1000 + 1, watermark + 1), so a quiet key drains once the
+    * watermark passes its rows; a key with nothing buffered arms no
+    * timer and keeps its accumulator.
+    */
+  final class OrderedFold[K, O](val zero: Array[Long], val step: FoldStep,
+      val emit: (K, Array[Long]) => O) extends Serializable {
+
+    def apply(events: Dataset[FoldEvent[K]], delayS: Long)(implicit
+        keyEnc: Encoder[K], outEnc: Encoder[O]): Dataset[O] = {
+      def update(key: K, rows: Iterator[FoldEvent[K]],
+          state: GroupState[FoldState]): Iterator[O] = {
+        val wmMs = state.getCurrentWatermarkMs()
+        val st = state.getOption.getOrElse(FoldState(zero.clone(),
+          Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray))
+        val (bt, bi, bv) = (ArrayBuilder.make[Long], ArrayBuilder.make[Long],
+          ArrayBuilder.make[Long])
+        bt.addAll(st.bufT); bi.addAll(st.bufI); bv.addAll(st.bufV)
+        rows.foreach { e => bt += e.tsec; bi += e.event_id; bv += e.v }
+        val (t, id, v) = (bt.result(), bi.result(), bv.result())
+        val (ready, hold) = t.indices.toArray.partition(t(_) < wmMs / 1000L)
+        ready.sorted(Ordering.fromLessThan[Int]((a, b) =>
+            t(a) < t(b) || (t(a) == t(b) && id(a) < id(b))))
+          .foreach(i => step(st.acc, t(i), id(i), v(i)))
+        val holdT = hold.map(t(_))
+        state.update(FoldState(st.acc, holdT, hold.map(id(_)), hold.map(v(_))))
+        // a timeout not re-set in this call is cleared, so a key with
+        // nothing buffered keeps its accumulator and arms no timer
+        if (hold.nonEmpty)
+          state.setTimeoutTimestamp(math.max(holdT.min * 1000L + 1L, wmMs + 1L))
+        if (ready.isEmpty) Iterator.empty else Iterator.single(emit(key, st.acc))
+      }
+
+      events
+        .withColumn("ts", timestamp_seconds(col("tsec")))
+        .withWatermark("ts", s"$delayS seconds")
+        .as[FoldEvent[K]](events.encoder)
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Update,
+          GroupStateTimeout.EventTimeTimeout)(update)(
+          Encoders.product[FoldState], outEnc)
+    }
+  }
+
   case class BalOut(user_id: Long, n_folded: Long, balance_cents: Long)
 
-  case class DebEvent(user_id: Long, event_id: Long, tsec: Long)
-  /** lastKept = Long.MinValue ⇒ nothing kept yet (the fold seed). */
-  case class DebState(lastKept: Long, nSeen: Long, nKept: Long,
-      idSum: Long, buffered: Seq[DebEvent])
+  /** D23: streaming floored running balance (balance = max(0,
+    * balance + Δ), B71). The fold has no partial-aggregation or prefix
+    * shortcut: order matters irreducibly. The final row per key equals
+    * the batch fold over every delta strictly below the final
+    * watermark. Accumulator: (n_folded, balance).
+    */
+  val statefulBalanceFold = new OrderedFold[Long, BalOut](Array(0L, 0L),
+    (a, _, _, cents) => { a(0) += 1; a(1) = math.max(a(1) + cents, 0L) },
+    (uid, a) => BalOut(uid, a(0), a(1)))
+
   case class DebOut(user_id: Long, n_seen: Long, n_kept: Long,
       kept_id_sum: Long)
 
-  /** D41: STREAMING ROLLING DEBOUNCE — B119's cooldown fold (keep an
-    * event iff ≥ `cooldownS` since the last KEPT event of its key)
-    * over an out-of-order stream. Like the D23 balance fold, the
-    * rule is a genuine ordered NON-DECOMPOSABLE fold (survival
-    * depends on which earlier events survived), so each key buffers
-    * rows in state and folds them in (tsec, event_id) order ONLY
-    * below the watermark; rows at/above it stay buffered for the
-    * next batch. Event-time timers re-arm above the watermark so a
-    * quiet key still drains. Emission (update mode): one running
-    * (n_seen, n_kept, kept_id_sum) row per fold step — consumers
-    * take the max-n_seen row per key (the D23 convention).
+  /** D41: STREAMING ROLLING DEBOUNCE — B119's cooldown fold: keep an
+    * event iff ≥ 300 s have passed since the last KEPT event of its
+    * key. Survival depends on which earlier events survived, so the
+    * fold is ordered and non-decomposable. Accumulator: (n_seen,
+    * n_kept, kept_id_sum, last kept tsec); Long.MinValue means
+    * nothing kept yet.
     */
-  def statefulDebounceFold(events: Dataset[DebEvent], delayS: Long,
-      cooldownS: Long = 300L): Dataset[DebOut] = {
-    import events.sparkSession.implicits._
-
-    def foldReady(uid: Long, st: DebState, wmS: Long): (DebState, Option[DebOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var last = st.lastKept; var nk = st.nKept; var ids = st.idSum
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          if (last == Long.MinValue || r.tsec - last >= cooldownS) {
-            last = r.tsec; nk += 1; ids += r.event_id
-          }
-        }
-        val next = DebState(last, st.nSeen + ready.size, nk, ids, hold)
-        (next, Some(DebOut(uid, next.nSeen, next.nKept, next.idSum)))
+  val statefulDebounceFold = new OrderedFold[Long, DebOut](
+    Array(0L, 0L, 0L, Long.MinValue),
+    (a, tsec, id, _) => {
+      a(0) += 1
+      if (a(3) == Long.MinValue || tsec - a(3) >= 300L) {
+        a(1) += 1; a(2) += id; a(3) = tsec
       }
-    }
+    },
+    (uid, a) => DebOut(uid, a(0), a(1), a(2)))
 
-    def update(uid: Long, rows: Iterator[DebEvent],
-        state: GroupState[DebState]): Iterator[DebOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption
-        .getOrElse(DebState(Long.MinValue, 0L, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(uid, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[DebEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  /** D23: streaming NON-DECOMPOSABLE ordered fold — the floored
-    * running balance (balance = max(0, balance + Δ), B71) over an
-    * out-of-order stream. The fold has no partial-aggregation or
-    * prefix shortcut (order matters irreducibly), so the stream
-    * buffers each key's deltas in state and folds them in event-time
-    * order ONLY up to the watermark — the horizon below which no
-    * earlier row can still arrive; rows at/above it stay buffered
-    * (exactly the event-time-timeout sessionizer's discipline).
-    * Emission is update-mode: the latest (n_folded, balance) per key;
-    * over an AvailableNow replay the final row per key equals the
-    * batch fold over every delta strictly below the final watermark.
-    */
-  def statefulBalanceFold(deltas: Dataset[BalDelta],
-      delayS: Long): Dataset[BalOut] = {
-    import deltas.sparkSession.implicits._
-
-    def foldReady(uid: Long, st: BalState, wmS: Long): (BalState, Option[BalOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var bal = st.balance
-        ready.sortBy(r => (r.tsec, r.event_id))
-          .foreach(r => bal = math.max(bal + r.cents, 0L))
-        val next = BalState(bal, st.nFolded + ready.size, hold)
-        (next, Some(BalOut(uid, next.nFolded, next.balance)))
-      }
-    }
-
-    def update(uid: Long, rows: Iterator[BalDelta],
-        state: GroupState[BalState]): Iterator[BalOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(BalState(0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(uid, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        // re-arm strictly above the current watermark or Spark rejects
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    deltas
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[BalDelta]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  case class AnomEvent(event_type: String, event_id: Long, tsec: Long,
-      cents: Long)
-  case class AnomState(n: Long, s: Long, q: Long, nAnom: Long,
-      buffered: Seq[AnomEvent])
   case class AnomOut(event_type: String, n_folded: Long,
       n_anomalies: Long, sum_cents: Long)
 
@@ -363,96 +342,37 @@ object SessionPipeline extends Serializable {
     * is tested against the running mean/variance of all PRIOR events
     * (the live telemetry outlier monitor; Welford's recurrence kept
     * as additive integer sufficient statistics n/Σc/Σc² instead of
-    * the float mean/M2 form, so replay is exact). The prefix rule
-    * makes this a genuine ORDERED fold — which events count as
-    * "prior" is order-determined — so it rides the D23 machinery:
-    * buffer below-watermark rows in state, fold in (tsec, event_id)
-    * order. The anomaly test is EXACT integer arithmetic, no doubles
-    * and no sqrt: |v − S/n| > 3·σ  ⟺  (v·n − S)²·(n−1) > 9·n·(n·Q − S²)
+    * the float mean/M2 form, so replay is exact). Which events count
+    * as "prior" is order-determined, so the fold is ordered. The
+    * anomaly test is EXACT integer arithmetic, no doubles and no
+    * sqrt: |v − S/n| > 3·σ  ⟺  (v·n − S)²·(n−1) > 9·n·(n·Q − S²)
     * (sample variance), evaluated in BigInt; warm-up: prior n ≥ 30.
     * Σc² stays in a Long — c ≤ 10⁵ cents ⇒ c² ≤ 10¹⁰, safe to ~10⁸
     * events/key (the stated bound; the ×1000 clone corpus holds
-    * ~1.4·10⁷/key). State is 4 longs + the below-watermark buffer.
+    * ~1.4·10⁷/key). Accumulator: (n, Σc, Σc², n_anomalies).
     */
-  def statefulAnomalyFold(events: Dataset[AnomEvent],
-      delayS: Long): Dataset[AnomOut] = {
-    import events.sparkSession.implicits._
-
-    def anomalous(st: AnomState, c: Long): Boolean = {
-      if (st.n < 30) false
-      else {
-        val n = BigInt(st.n); val s = BigInt(st.s); val q = BigInt(st.q)
+  val statefulAnomalyFold = new OrderedFold[String, AnomOut](
+    Array(0L, 0L, 0L, 0L),
+    (a, _, _, c) => {
+      if (a(0) >= 30) {
+        val n = BigInt(a(0)); val s = BigInt(a(1)); val q = BigInt(a(2))
         val dev = BigInt(c) * n - s
-        dev * dev * (n - 1) > 9 * n * (n * q - s * s)
+        if (dev * dev * (n - 1) > 9 * n * (n * q - s * s)) a(3) += 1
       }
-    }
+      a(0) += 1; a(1) += c; a(2) += c * c
+    },
+    (key, a) => AnomOut(key, a(0), a(3), a(1)))
 
-    def foldReady(key: String, st: AnomState,
-        wmS: Long): (AnomState, Option[AnomOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var cur = st
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          val hit = if (anomalous(cur, r.cents)) 1L else 0L
-          cur = AnomState(cur.n + 1, cur.s + r.cents,
-            cur.q + r.cents * r.cents, cur.nAnom + hit, Nil)
-        }
-        val next = cur.copy(buffered = hold)
-        (next, Some(AnomOut(key, next.n, next.nAnom, next.s)))
-      }
-    }
-
-    def update(key: String, rows: Iterator[AnomEvent],
-        state: GroupState[AnomState]): Iterator[AnomOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(AnomState(0L, 0L, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(key, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[AnomEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  // Round-13 optimization (guide §2.3 "narrower types", applied to
-  // the STATE encoder): the below-watermark buffer is three parallel
-  // primitive arrays (tsec, event_id, cents) instead of
-  // Seq[AnomEvent] — at the ×100 replay the whole corpus sits in
-  // this buffer for one batch, and the per-row product encoding
-  // (incl. a redundant event_type string per row — it equals the
-  // key) dominated the state commit. Array[Long] fields encode as
-  // three binary blobs. Fold order and emissions are unchanged: the
-  // ready set is still sorted by (tsec, event_id) before folding.
-  case class ConfState(n: Long, hist: Seq[Long], nAlarms: Long,
-      hiMass: Long, bufT: Array[Long], bufI: Array[Long], bufC: Array[Long])
   case class ConfOut(event_type: String, n_folded: Long, n_alarms: Long,
       hi_mass: Long)
 
-  /** D53: STREAMING CONFORMAL p-VALUE GATE (round 13; split/
-    * prequential conformal prediction — Vovk et al. 2005; Shafer &
-    * Vovk JMLR 2008) — the DISTRIBUTION-FREE anomaly monitor beside
-    * D44's parametric z-gate: each event's nonconformity score is
-    * its value band, and its prequential p-value is the exact rank
-    * statistic p = (1 + #{prior events with band ≥ mine}) / (n + 1)
-    * over everything folded so far — valid (P(p ≤ α) ≤ α) under
+  /** D53: STREAMING CONFORMAL p-VALUE GATE (split/prequential
+    * conformal prediction — Vovk et al. 2005; Shafer & Vovk JMLR
+    * 2008) — the DISTRIBUTION-FREE anomaly monitor beside D44's
+    * parametric z-gate: each event's nonconformity score is its value
+    * band, and its prequential p-value is the exact rank statistic
+    * p = (1 + #{prior events with band ≥ mine}) / (n + 1) over
+    * everything folded so far — valid (P(p ≤ α) ≤ α) under
     * exchangeability with NO distributional assumption, which is
     * precisely what the z-gate cannot promise on skewed telemetry.
     * Alarm at α = 1/16 as the exact integer test
@@ -460,109 +380,28 @@ object SessionPipeline extends Serializable {
     *
     * BOUNDED STATE: the prefix multiset is kept as a 64-counter band
     * histogram (band = clamp(cents div 1000, 0..63) — $10 bands,
-    * clamped so any value range fits), so per-key state is 64 longs
-    * + the below-watermark buffer regardless of stream length — the
-    * D33/D35 histogram-state discipline. The prefix rule makes the
-    * fold ORDERED (which events are "prior" is order-determined), so
-    * it rides the D23/D44 buffered-fold machinery: buffer
-    * below-watermark rows, fold in (tsec, event_id) order. Exact
-    * integers end to end; the oracle replays the same prefix ranks
-    * with a bounded band-threshold union trick (each event
-    * contributes one row per band ≤ its own; a per-(key, band)
-    * running count then reads cnt_ge off a plain window).
+    * clamped so any value range fits), so the accumulator is
+    * (n, n_alarms, hi_mass, 64 band counts) regardless of stream
+    * length — the D33/D35 histogram-state discipline. Exact integers
+    * end to end; the oracle replays the same prefix ranks with a
+    * bounded band-threshold union trick (each event contributes one
+    * row per band ≤ its own; a per-(key, band) running count then
+    * reads cnt_ge off a plain window).
     */
-  def statefulConformalFold(events: Dataset[AnomEvent],
-      delayS: Long): Dataset[ConfOut] = {
-    import events.sparkSession.implicits._
+  val statefulConformalFold = new OrderedFold[String, ConfOut](
+    new Array[Long](3 + 64),
+    (a, _, _, c) => {
+      val b = math.min(63L, math.max(0L, c / 1000L)).toInt
+      var cntGe = 0L
+      var k = b
+      while (k < 64) { cntGe += a(3 + k); k += 1 }
+      if (a(0) >= 30 && 16L * (1L + cntGe) <= a(0) + 1L) a(1) += 1
+      if (b >= 32) a(2) += 1
+      a(3 + b) += 1
+      a(0) += 1
+    },
+    (key, a) => ConfOut(key, a(0), a(1), a(2)))
 
-    def band(c: Long): Int =
-      math.min(63L, math.max(0L, c / 1000L)).toInt
-
-    def foldReady(key: String, st: ConfState,
-        wmS: Long): (ConfState, Option[ConfOut]) = {
-      val nb = st.bufT.length
-      var nReady = 0
-      var i = 0
-      while (i < nb) { if (st.bufT(i) < wmS) nReady += 1; i += 1 }
-      if (nReady == 0) (st, None)
-      else {
-        val ready = new Array[Integer](nReady)
-        val holdT = new Array[Long](nb - nReady)
-        val holdI = new Array[Long](nb - nReady)
-        val holdC = new Array[Long](nb - nReady)
-        var r = 0; var o = 0; i = 0
-        while (i < nb) {
-          if (st.bufT(i) < wmS) { ready(r) = i; r += 1 }
-          else { holdT(o) = st.bufT(i); holdI(o) = st.bufI(i)
-            holdC(o) = st.bufC(i); o += 1 }
-          i += 1
-        }
-        java.util.Arrays.sort(ready, (a: Integer, b: Integer) => {
-          val c = java.lang.Long.compare(st.bufT(a), st.bufT(b))
-          if (c != 0) c else java.lang.Long.compare(st.bufI(a), st.bufI(b))
-        })
-        var n = st.n
-        var alarms = st.nAlarms
-        var hi = st.hiMass
-        val h = st.hist.toArray
-        var j = 0
-        while (j < nReady) {
-          val b = band(st.bufC(ready(j)))
-          var cntGe = 0L
-          var k = b
-          while (k < 64) { cntGe += h(k); k += 1 }
-          if (n >= 30 && 16L * (1L + cntGe) <= n + 1L) alarms += 1
-          if (b >= 32) hi += 1
-          h(b) += 1
-          n += 1
-          j += 1
-        }
-        val next = ConfState(n, h.toSeq, alarms, hi, holdT, holdI, holdC)
-        (next, Some(ConfOut(key, n, alarms, hi)))
-      }
-    }
-
-    def update(key: String, rows: Iterator[AnomEvent],
-        state: GroupState[ConfState]): Iterator[ConfOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption
-        .getOrElse(ConfState(0L, Seq.fill(64)(0L), 0L, 0L,
-          Array.emptyLongArray, Array.emptyLongArray, Array.emptyLongArray))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else {
-          val bt = scala.collection.mutable.ArrayBuilder.make[Long]
-          val bi = scala.collection.mutable.ArrayBuilder.make[Long]
-          val bc = scala.collection.mutable.ArrayBuilder.make[Long]
-          rows.foreach { e => bt += e.tsec; bi += e.event_id; bc += e.cents }
-          st0.copy(bufT = st0.bufT ++ bt.result(),
-            bufI = st0.bufI ++ bi.result(),
-            bufC = st0.bufC ++ bc.result())
-        }
-      val (next, out) = foldReady(key, withNew, wmS)
-      if (next.bufT.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake =
-          if (next.bufT.isEmpty) state.getCurrentWatermarkMs() + 1000L
-          else math.max(next.bufT.min * 1000L + 1L,
-            state.getCurrentWatermarkMs() + 1L)
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[AnomEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  case class PhState(n: Long, s: Long, m: Long, minM: Long, maxPh: Long,
-      nAlarms: Long, buffered: Seq[AnomEvent])
   case class PhOut(event_type: String, n_folded: Long, max_ph_e6: Long,
       n_alarms: Long)
 
@@ -570,72 +409,25 @@ object SessionPipeline extends Serializable {
     * mean-shift detector (Page Biometrika 1954; Hinkley 1971), per
     * key: m_t = Σ_{i≤t} (x_i − x̄_i), PH_t = m_t − min_{i≤t} m_i
     * (min including the initial 0), alarm when PH_t > λ. The running
-    * mean makes the fold genuinely ORDERED, so it rides the D23/D44
-    * buffered-fold machinery. FULLY exact integers: the per-step
+    * mean makes the fold ordered. FULLY exact integers: the per-step
     * deviation is dev_e6 = c·10⁶ − (S_t·10⁶) // t (integer floor
     * division — S·10⁶ stays in a Long to ~9·10¹² cents/key), so m,
     * minM and PH are exact BIGINTs both engines replay bit-for-bit
     * with prefix windows. λ = 5000 cents · 10⁶ (a 50-dollar sustained
-    * mean lift). State per key: 6 longs + the below-watermark buffer.
+    * mean lift). Accumulator: (n, S, m, min m, max PH, n_alarms).
     */
-  def statefulPageHinkley(events: Dataset[AnomEvent], delayS: Long,
-      lambdaE6: Long = 5000L * 1000000): Dataset[PhOut] = {
-    import events.sparkSession.implicits._
+  val statefulPageHinkley = new OrderedFold[String, PhOut](
+    new Array[Long](6),
+    (a, _, _, c) => {
+      a(0) += 1; a(1) += c
+      a(2) += c * 1000000L - (a(1) * 1000000L) / a(0)
+      a(3) = math.min(a(3), a(2))
+      val ph = a(2) - a(3)
+      a(4) = math.max(a(4), ph)
+      if (ph > 5000L * 1000000L) a(5) += 1
+    },
+    (key, a) => PhOut(key, a(0), a(4), a(5)))
 
-    def foldReady(key: String, st: PhState,
-        wmS: Long): (PhState, Option[PhOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var cur = st
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          val n = cur.n + 1
-          val s = cur.s + r.cents
-          val dev = r.cents * 1000000L - (s * 1000000L) / n
-          val m = cur.m + dev
-          val minM = math.min(cur.minM, m)
-          val ph = m - minM
-          cur = PhState(n, s, m, minM, math.max(cur.maxPh, ph),
-            cur.nAlarms + (if (ph > lambdaE6) 1L else 0L), Nil)
-        }
-        val next = cur.copy(buffered = hold)
-        (next, Some(PhOut(key, next.n, next.maxPh, next.nAlarms)))
-      }
-    }
-
-    def update(key: String, rows: Iterator[AnomEvent],
-        state: GroupState[PhState]): Iterator[PhOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(
-        PhState(0L, 0L, 0L, 0L, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(key, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[AnomEvent]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
-
-  case class SprtEvent(shard: Long, event_id: Long, tsec: Long, x: Int)
-  case class SprtState(n: Long, n1: Long, decision: Int, nAt: Long,
-      n1At: Long, buffered: Seq[SprtEvent])
   case class SprtOut(shard: Long, n_seen: Long, n1: Long, decision: String,
       n_at_decision: Long, n1_at_decision: Long)
 
@@ -645,74 +437,28 @@ object SessionPipeline extends Serializable {
     * vs H1: P = 0.15 at α = β = 0.05, freezing its decision at the
     * first ±ln(0.95/0.05) boundary crossing (the group-sequential
     * "stop the experiment early" monitor; the batch twin is B157
-    * sprt_decision). The prefix LLR makes the fold ORDERED, so it
-    * rides the D23/D44 buffered-fold machinery. State per shard is
-    * five longs + the below-watermark buffer; the LLR uses the SAME
-    * pinned double log-literals as B157 (exact-integer counts ×
-    * pinned constants — no live libm), so the oracle replays the
-    * crossing bit-for-bit with prefix windows.
+    * sprt_decision). The prefix LLR makes the fold ordered. The LLR
+    * uses the SAME pinned double log-literals as B157 (exact-integer
+    * counts × pinned constants — no live libm), so the oracle replays
+    * the crossing bit-for-bit with prefix windows. The payload is the
+    * 0/1 purchase outcome. Accumulator: (n, n1, decision, n at the
+    * decision, n1 at the decision); decision 1 = accept H1,
+    * 2 = accept H0.
     */
-  def statefulSprt(events: Dataset[SprtEvent],
-      delayS: Long): Dataset[SprtOut] = {
-    import events.sparkSession.implicits._
-    val C1 = 0.4054651081081642      // ln(0.15/0.10), pinned
-    val C0 = -0.05715841383994864    // ln(0.85/0.90), pinned
-    val Bound = 2.9444389791664403   // ln(0.95/0.05), pinned
+  private val SprtC1 = 0.4054651081081642      // ln(0.15/0.10), pinned
+  private val SprtC0 = -0.05715841383994864    // ln(0.85/0.90), pinned
+  private val SprtBound = 2.9444389791664403   // ln(0.95/0.05), pinned
 
-    def foldReady(key: Long, st: SprtState,
-        wmS: Long): (SprtState, Option[SprtOut]) = {
-      val (ready, hold) = st.buffered.partition(_.tsec < wmS)
-      if (ready.isEmpty) (st, None)
-      else {
-        var cur = st
-        ready.sortBy(r => (r.tsec, r.event_id)).foreach { r =>
-          val n = cur.n + 1
-          val n1 = cur.n1 + r.x
-          var dec = cur.decision
-          var nAt = cur.nAt
-          var n1At = cur.n1At
-          if (dec == 0) {
-            val llr = n1 * C1 + (n - n1) * C0
-            if (llr >= Bound) { dec = 1; nAt = n; n1At = n1 }
-            else if (llr <= -Bound) { dec = 2; nAt = n; n1At = n1 }
-          }
-          cur = SprtState(n, n1, dec, nAt, n1At, Nil)
-        }
-        val next = cur.copy(buffered = hold)
-        val decision = next.decision match {
-          case 1 => "accept_h1"; case 2 => "accept_h0"; case _ => "continue"
-        }
-        (next, Some(SprtOut(key, next.n, next.n1, decision,
-          next.nAt, next.n1At)))
+  val statefulSprt = new OrderedFold[Long, SprtOut](new Array[Long](5),
+    (a, _, _, x) => {
+      a(0) += 1; a(1) += x
+      if (a(2) == 0) {
+        val llr = a(1) * SprtC1 + (a(0) - a(1)) * SprtC0
+        if (llr >= SprtBound) { a(2) = 1; a(3) = a(0); a(4) = a(1) }
+        else if (llr <= -SprtBound) { a(2) = 2; a(3) = a(0); a(4) = a(1) }
       }
-    }
-
-    def update(key: Long, rows: Iterator[SprtEvent],
-        state: GroupState[SprtState]): Iterator[SprtOut] = {
-      val wmS = state.getCurrentWatermarkMs() / 1000L
-      val st0 = state.getOption.getOrElse(SprtState(0L, 0L, 0, 0L, 0L, Nil))
-      val withNew =
-        if (state.hasTimedOut) st0
-        else st0.copy(buffered = st0.buffered ++ rows)
-      val (next, out) = foldReady(key, withNew, wmS)
-      if (next.buffered.isEmpty && state.hasTimedOut) state.remove()
-      else {
-        state.update(next)
-        val wake = next.buffered.map(_.tsec * 1000L) match {
-          case Nil => state.getCurrentWatermarkMs() + 1000L
-          case ts => math.max(ts.min + 1L, state.getCurrentWatermarkMs() + 1L)
-        }
-        state.setTimeoutTimestamp(wake)
-      }
-      out.iterator
-    }
-
-    events
-      .withColumn("ts", timestamp_seconds(col("tsec")))
-      .withWatermark("ts", s"$delayS seconds")
-      .as[SprtEvent]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(
-        OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(update)
-  }
+    },
+    (shard, a) => SprtOut(shard, a(0), a(1),
+      a(2) match { case 1 => "accept_h1"; case 2 => "accept_h0"; case _ => "continue" },
+      a(3), a(4)))
 }
