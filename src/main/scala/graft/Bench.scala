@@ -1,74 +1,341 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable
 
 /** Benchmark main: times every registered query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line and also writes it to a
   * file (`SPARK_GRAFT_BENCH_OUT`, default `bench_out.json`) so a
   * truncated log can't lose the result.
   *
-  * Methodology (round 11 — the official record must survive ANY kill;
-  * BENCH_r09 and r10 both died rc 124 with the headline block last):
-  *   - the HEADLINE BLOCK RUNS FIRST. It is the official metric, and
-  *     two consecutive driver rounds proved that whatever runs last
-  *     is the block a wall-clock kill eats. Fresh-JVM inflation is
-  *     controlled the same way it always was: a full untimed warmup
-  *     pass, then `SPARK_GRAFT_BENCH_RUNS` (default 2) timed passes
-  *     with MEDIAN + MIN reported (min is the load-robust statistic:
+  * Methodology:
+  *   - the HEADLINE BLOCK RUNS FIRST: it is the official metric, and
+  *     whatever runs last is the block a wall-clock kill eats. It runs
+  *     `SPARK_GRAFT_BENCH_RUNS` (default 2) timed passes and reports
+  *     MEDIAN + MIN per query (min is the load-robust statistic:
   *     external load only ever inflates a sample);
   *   - a GLOBAL WALL BUDGET (`SPARK_GRAFT_BENCH_BUDGET_S`, default
-  *     2,900 s of bench-JVM wall since round 13) is checked before every probe
-  *     measurement and before every clone-table write; once
-  *     exceeded, every remaining probe records the sentinel -3.0
-  *     ("skipped_budget") instead of running. The headline block is
-  *     budget-EXEMPT — it is the record;
-  *   - probe blocks run headline → ×10 → ×100 → ×1000 (round 12,
-  *     r11 verdict #1: the r11 official record budget-sentineled all
-  *     27 ×100 rows — the second decade must live in the OFFICIAL
-  *     record, not only in rehearsals). The ×1000 block runs last
-  *     but is TRIMMED to its verdict-bearing rows (the heavy
-  *     dedup/corpus family + the holt_winters re-pin + the
-  *     corpus_pretrain_pipeline composition, r11 verdict #7) so the
-  *     whole shape fits the budget with the measured ~500 s idle
-  *     margin; the settled ×1000 rows are frozen in retiredX1000
-  *     below (SPARK_GRAFT_PROBE_RETIRED=1 resurrects);
-  *   - a PER-QUERY REGRESSION GATE (r11 verdict #5): BenchPins pins
-  *     each query's round-11 min (official record ∧ idle rehearsal);
-  *     a query whose current min-of-samples exceeds 2× its pin lands
-  *     in the record's `regressed` list — load only inflates, so a
-  *     2×-inflated MIN is a code regression, not noise;
-  *   - PROBE RETIREMENT (round 11): settled probes — two rounds of
-  *     green official records plus a judge isolation table (VERDICT
-  *     r10) — are frozen in `retiredX10`/`retiredX100` below and no
-  *     longer run by default (SPARK_GRAFT_PROBE_RETIRED=1 resurrects
-  *     them for a local audit). What still runs every round: a
-  *     ~22-row canary spanning every scale family, probes for
-  *     queries added or changed since the last green record, and
-  *     every ×1000 row. Pointers to the frozen rows' last green
-  *     records live in SURVEY §20;
-  *   - ×1000 AND ×100 rows are guarded by PINNED EXPECTED-VALUE
-  *     tables (×1000: the extension-session official record, idle
-  *     box, 2026-08-16 — SURVEY §19; ×100: min of the two idle r12
-  *     rehearsals — r12 verdict #7): a sample above 3× its pinned
-  *     value triggers up to two more samples (load can only inflate;
-  *     min wins), and a row still above 3× is flagged in-record as
-  *     `load_suspect` rather than trusted;
-  *   - a START LOAD GATE (r12 verdict #2): the bench refuses to
-  *     start while the 1-min load average exceeds
-  *     SPARK_GRAFT_LOAD_GATE (default 1.5), waiting in 30 s steps up
-  *     to SPARK_GRAFT_LOAD_GATE_WAIT_S (default 600 s); the wait
+  *     2,900 s of bench-JVM wall) is checked before every probe
+  *     measurement and before every clone write; once exceeded, every
+  *     remaining probe records the sentinel -3.0 ("skipped_budget")
+  *     instead of running. The headline block is budget-EXEMPT;
+  *   - probe blocks then run in the order of [[blocks]]; the heaviest
+  *     blocks come last so a budget squeeze sacrifices them first;
+  *   - a PER-QUERY REGRESSION GATE: each query's min is compared with
+  *     its pin, read at start-up from the bench records that produced
+  *     the pins ([[loadPins]]); see [[regressed]];
+  *   - pinned probe rows (×100, ×1000, organic) follow
+  *     [[pinnedRow]]: a sample above 3× its expected value triggers up
+  *     to two more samples, and a row still above 3× is flagged in the
+  *     record as `load_suspect` rather than trusted;
+  *   - a START LOAD GATE: the bench waits while the 1-min load average
+  *     exceeds `SPARK_GRAFT_LOAD_GATE` (default 1.5), in 30 s steps up
+  *     to `SPARK_GRAFT_LOAD_GATE_WAIT_S` (default 600 s); the wait
   *     counts against the wall budget and the decision is emitted in
   *     the record (`load_gate*` fields);
   *   - the JSON record is flushed INCREMENTALLY — after every probe
-  *     result and every headline sample — so a harness-ceiling kill
-  *     at any point leaves every completed measurement parseable;
-  *     the final write sets `"complete":true`;
+  *     result and every headline sample — so a kill at any point
+  *     leaves every completed measurement parseable; the final write
+  *     sets `"complete":true`;
   *   - execution is forced through the `noop` datasource write, which
   *     materializes every output row — `.count()` would let Catalyst
   *     collapse narrow projections to a row-count scan.
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR`, `SPARK_GRAFT_CPUS`,
+  * `SPARK_GRAFT_BENCH_RUNS`, `SPARK_GRAFT_BENCH_BUDGET_S`,
+  * `SPARK_GRAFT_BENCH_ONLY` (comma list: time only those queries),
+  * `SPARK_GRAFT_BENCH_OUT`, `SPARK_GRAFT_LOAD_GATE`,
+  * `SPARK_GRAFT_LOAD_GATE_WAIT_S`, `SPARK_GRAFT_SCALE_PROBE` (0 skips
+  * every probe block).
   */
 object Bench {
+  val SkippedBudget = -3.0
+  val UnknownName = -4.0
+
+  /** A headline first sample at or under this is kept without the
+    * confirming pass, unless it would trip the regression gate. */
+  val HeadlineFastSec = 3.0
+  /** A ceiling-run first sample at or under max(FastConfirmSec,
+    * ceiling × FastConfirmFrac) is kept without a confirming run. */
+  val FastConfirmSec = 15.0
+  val FastConfirmFrac = 0.5
+
+  /** Pins come from two idle-box records of the same code: the keys
+    * of the first, each at the smaller non-negative min of the two. */
+  val PinRecords: (Path, Path) = (Paths.get("records/BENCH_r12_rehearsal3.json"),
+    Paths.get("records/BENCH_r12_rehearsal4.json"))
+
+  /** Median (mean of the middle two for an even count) and min of the
+    * non-negative samples; (-1, -1) when there are none. */
+  def medMin(samples: Seq[Double]): (Double, Double) = {
+    val ts = samples.filter(_ >= 0).sorted
+    if (ts.isEmpty) (-1.0, -1.0)
+    else {
+      val med =
+        if (ts.length % 2 == 1) ts(ts.length / 2)
+        else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0
+      (med, ts.head)
+    }
+  }
+
+  /** The regression gate: min > 2× the env-scaled pin AND > the
+    * env-scaled pin + 0.25 s. The MIN is the load-robust statistic — a
+    * min that doubled is a code regression; the absolute floor keeps
+    * sub-second queries (whose fixed JVM/scheduling overhead
+    * dominates) from flagging on noise. */
+  def regressed(min: Double, pin: Double, envRatio: Double): Boolean =
+    min > pin * envRatio * 2.0 && min > pin * envRatio + 0.25
+
+  /** The suite-wide env ratio: the median (upper middle) of min/pin
+    * over pins > 0.05 s, floored at 1. A box-level slowdown moves every
+    * ratio and is discounted by exactly its own factor; a single-query
+    * regression cannot move the median of 400+ ratios, so the gate
+    * still localizes it. A global code regression is hidden here by
+    * design — the headline total shows that. */
+  def envRatio(mins: Iterable[(String, Double)], pins: Map[String, Double]): Double = {
+    val ratios = mins.toSeq.collect {
+      case (n, mn) if mn >= 0 => pins.get(n).collect { case p if p > 0.05 => mn / p }
+    }.flatten.sorted
+    if (ratios.isEmpty) 1.0 else math.max(1.0, ratios(ratios.length / 2))
+  }
+
+  /** Headline fast-confirm: skip a later pass when every valid sample
+    * so far is ≤ [[HeadlineFastSec]] — load only inflates, so keeping
+    * the small sample is conservative — but never when the min would
+    * trip the regression gate (at ratio 1), so the gate only ever
+    * fires on a min-of-2. */
+  def fastConfirmSkip(samples: Seq[Double], pin: Option[Double]): Boolean = {
+    val valid = samples.filter(_ >= 0)
+    valid.nonEmpty && valid.forall(_ <= HeadlineFastSec) &&
+      pin.forall(p => !regressed(valid.min, p, 1.0))
+  }
+
+  /** The pinned-row rule for ceiling-run probes; returns (min, load
+    * suspect). A first sample is kept alone when it is at or under
+    * max(FastConfirmSec, ceiling × FastConfirmFrac) or within 1.5× its
+    * pin, and not above the 3×-pin bar; a negative sample (timeout or
+    * failure) is the finding and is kept too. Otherwise a confirming
+    * sample runs, plus — for a row still above its bar — one more; the
+    * min wins. `budgetLeft` stops extra samples past the wall budget.
+    * A row still above its bar is load-suspect. */
+  def pinnedRow(ceilingSec: Int, expected: Option[Double], budgetLeft: () => Boolean)(
+      sample: () => Double): (Double, Boolean) = {
+    val first = sample()
+    def overBar(t: Double) = expected.exists(t > _ * 3.0)
+    val keep = (first <= math.max(FastConfirmSec, ceilingSec * FastConfirmFrac) ||
+      expected.exists(first <= _ * 1.5)) && !overBar(first)
+    var best = first
+    var extra = 0
+    while (!keep && (extra == 0 || overBar(best)) && extra < 2 && budgetLeft()) {
+      val s = sample()
+      if (s >= 0) best = math.min(best, s)
+      extra += 1
+    }
+    (best, overBar(best))
+  }
+
+  /** Headline pins: per key of `official`'s `queries_min` with a
+    * non-negative value, the smaller of it and `rehearsal`'s value
+    * when that one is non-negative. */
+  def derivePins(official: Map[String, Double],
+      rehearsal: Map[String, Double]): Map[String, Double] =
+    official.collect { case (n, v) if v >= 0 =>
+      n -> rehearsal.get(n).filter(_ >= 0).fold(v)(math.min(v, _))
+    }
+
+  /** Reads the pins from two bench records; a missing or unreadable
+    * record is an error — a silently disabled gate is not allowed. */
+  def loadPins(official: Path, rehearsal: Path): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    def queriesMin(p: Path): Map[String, Double] =
+      try {
+        val node = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(p.toFile).get("queries_min")
+        require(node != null && node.isObject, "no queries_min object")
+        node.properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
+      } catch {
+        case e: Exception => throw new IllegalStateException(
+          s"bench pin record $p is missing or unreadable: $e", e)
+      }
+    derivePins(queriesMin(official), queriesMin(rehearsal))
+  }
+
+  /** One probe block: `copies`× clones of the base tables in `dir`
+    * (documents-only with per-replica text when `organic`), timed at
+    * `partitions` shuffle partitions. With no ceiling each row is one
+    * plain run; with one, rows follow [[pinnedRow]] against `expected`. */
+  final case class ProbeBlock(tag: String, dir: String, copies: Int,
+      organic: Boolean, partitions: Int, ceilingSec: Option[Int],
+      expected: Map[String, Double], names: Seq[String])
+
+  /** The canary (one line of rationale each): rows spanning every scale
+    * family, so a regression anywhere in the engine moves a probe. */
+  private val canary = Seq(
+    "dedup_minhash_pairs",     // banded MinHash dedup family
+    "dedup_clusters",          // iterative quotient-CC join
+    "semantic_dedup_sharded",  // sharded SemDeDup production path
+    "line_dedup",              // line-grain explode dedup
+    "span_dedup_rewrite",      // heaviest span-family rewrite (ExactSubstr)
+    "ann_ivf_trained",         // trained IVF chain (train+assign+search)
+    "ann_ivfpq_topk",          // PQ residual-encode chain
+    "graph_pagerank",          // iterative graph, trade clones
+    "graph_triangles",         // heaviest one-shot graph join, trade
+    "streaming_pattern_match", // CEP ListState — largest streaming row
+    "streaming_tws_profile",   // transformWithState/RocksDB state
+    "streaming_attribution",   // chained stateful streaming
+    "sessionize_events",       // session windows over event stream
+    "corpus_pretrain_pipeline",// multi-stage corpus pipeline composite
+    "text_top_bigrams",        // token explode + TopKPerKey
+    "distinct_ngram_diversity",// heaviest text distinct shuffle
+    "setsim_prefix_join",      // PPJoin prefix-filter discipline
+    "window_range_frames",     // value-RANGE window frames, trade
+    "mannwhitney_values",      // value-grain statistics class
+    "spearman_daily",          // day-grain statistics class, trade
+    "attribution_markov",      // journey windows + model-sized solve
+    "mm_scene_cuts")           // multimodal frame-stream family
+
+  /** Every probe block, in run order. Probed queries beyond the canary
+    * each carry a scale shape the canary does not cover (one line
+    * each below). Queries without a probe ride a probed class: day- or
+    * k-grain folds (calendar-sized after one keyed agg), the
+    * value-grain prefix class (mannwhitney machinery), single
+    * map-side-combinable aggs, and the brute-force retrieval scan. */
+  val blocks: Seq[ProbeBlock] = Seq(
+    ProbeBlock("x10", "/tmp/graft_sfx10", 10, organic = false,
+      // 10× rows on the base partitions makes iterative shuffles
+      // (pagerank, CC) pay oversized tasks; AQE coalesces back down.
+      partitions = 64, ceilingSec = None, expected = Map.empty,
+      names = canary ++ Seq(
+        "ann_ivf_incremental",    // assign+append+drift, linear in the batch
+        "rag_chunk_split",        // token-linear explode, doc-bounded chunks
+        "interleaved_ranking",    // probed retrieval plans + one bounded merge fold
+        "ann_filtered_search",    // probed IVF shape + pushed-down label predicate
+        "cramer_von_mises",       // value-grain near-constant class
+        "pages_trend_test",       // day×type rank grid (friedman class)
+        "theil_u_forecast",       // day-grain near-constant class
+        "cliff_delta",            // mannwhitney rank machinery
+        "croston_intermittent",   // day-grain fold (holt_winters class)
+        "tracking_signal",        // day-grain fold (holt_winters class)
+        "streaming_topk_decay",   // live decayed top-k, bounded per-type heaps
+        "mood_median_test",       // value-grain median split, trade
+        "ewma_alpha_sweep",       // 8 day-grain integer-quantized folds
+        "chunk_dedup_stats",      // chunk explode + per-source distinct
+        "welch_anova",            // k-grain sufficient stats, trade
+        "quade_test",             // friedman grid + one day-grain range rank
+        "mm_audio_vad_segments",  // frame-stream explode (mm linear family)
+        "label_noise_screen",     // brute-force |Q|×corpus scan
+        "stratified_kfold_split", // map-only hash + keyed count
+        "energy_distance",        // value-grain prefix pass
+        "text_sttr",              // token-linear chunk explode
+        "ann_ivf_delete",         // incremental chain + keyed delete + tombstone anti-join
+        "ann_ivfpq_filtered",     // IVF-PQ over a pruned codes scan
+        "streaming_late_accounting", // row-grain stateful pass + wave writes
+        // ann_graph_topk: the build's bucketed pairs must stay
+        // subquadratic; at ×100 they reach ~4·10⁹, so ×10 only.
+        "ann_graph_topk",
+        "streaming_conformal_gate", // row-grain ordered fold, bounded state
+        "suffix_dup_stats",       // log-round prefix doubling
+        "corpus_js_divergence")), // source-pair dimension is clone-invariant
+    // 180 s: the heaviest legitimate row measures well under a minute;
+    // a quadratic regression would blow 10-100× past it. 100× rows on
+    // the base partitions outgrow the harness JVM's per-task memory.
+    // dedup_embed_cosine is excluded by design: it is the exact-O(n²)
+    // baseline its approximate replacements are gated against.
+    ProbeBlock("x100", "/tmp/graft_sfx100", 100, organic = false,
+      partitions = 256, ceilingSec = Some(180),
+      // Per row: the min of two idle records (the last two rows
+      // deflated by that record's uniform env ratio).
+      expected = Map(
+        "ann_filtered_search" -> 2.3, "ann_ivf_delete" -> 11.9,
+        "ann_ivf_incremental" -> 14.7, "ann_ivf_trained" -> 7.8,
+        "ann_ivfpq_filtered" -> 7.4, "ann_ivfpq_topk" -> 7.8,
+        "attribution_markov" -> 5.6, "chunk_dedup_stats" -> 1.7,
+        "corpus_pretrain_pipeline" -> 3.7, "cramer_von_mises" -> 1.3,
+        "dedup_clusters" -> 3.7, "dedup_minhash_pairs" -> 4.1,
+        "distinct_ngram_diversity" -> 35.6, "energy_distance" -> 1.3,
+        "graph_pagerank" -> 40.1, "line_dedup" -> 4.3,
+        "mannwhitney_values" -> 1.3, "mm_audio_vad_segments" -> 2.2,
+        "mm_scene_cuts" -> 1.2, "quade_test" -> 2.0,
+        "rag_chunk_split" -> 1.4, "semantic_dedup_sharded" -> 8.5,
+        "setsim_prefix_join" -> 8.4, "span_dedup_rewrite" -> 3.2,
+        "spearman_daily" -> 0.9, "streaming_attribution" -> 10.2,
+        "streaming_late_accounting" -> 31.7,
+        "streaming_pattern_match" -> 59.4, "streaming_tws_profile" -> 14.0,
+        "welch_anova" -> 1.1, "window_range_frames" -> 2.9,
+        "suffix_dup_stats" -> 106.0, "streaming_conformal_gate" -> 25.0),
+      // The canary minus the rows that never had a ×100 decade (adding
+      // a first decade is a deliberate act, not a canary).
+      names = canary.diff(Seq("sessionize_events", "text_top_bigrams", "graph_triangles")) ++
+        Seq("ann_ivf_incremental", "rag_chunk_split", "ann_filtered_search",
+          "cramer_von_mises", "chunk_dedup_stats", "welch_anova", "quade_test",
+          "mm_audio_vad_segments", "energy_distance", "ann_ivf_delete",
+          "ann_ivfpq_filtered", "streaming_late_accounting", "suffix_dup_stats",
+          "streaming_conformal_gate")),
+    // Organic growth: the plain ×N clones are exact text replicas, so
+    // the clone-collapsed queries do base-corpus work there. These rows
+    // re-time them on unique text. suffix_dup_stats pays ~O(L log L)
+    // doubling over unique text, hence the longer ceiling.
+    // setsim_prefix_join is not probed organically: at ×100 unique docs
+    // the un-collapsed PPJoin exhausts a local JVM's execution memory.
+    ProbeBlock("x100organic", "/tmp/graft_sfx100organic", 100, organic = true,
+      partitions = 256, ceilingSec = Some(300),
+      expected = Map("line_dedup" -> 9.2, "naive_bayes_score" -> 16.2,
+        "suffix_dup_stats" -> 149.4),
+      names = Seq("line_dedup", "naive_bayes_score", "suffix_dup_stats")),
+    // The third decade for the heavy dedup/corpus/classifier family,
+    // holt_winters and the composed corpus_pretrain_pipeline.
+    // semantic_dedup is excluded by design: its codebook scales
+    // k = √n, so its assign pass is the method's own n^1.5 floor. 300 s
+    // flags anything super-linear by >5× while tolerating a loaded box.
+    ProbeBlock("x1000", "/tmp/graft_sfx1000", 1000, organic = false,
+      partitions = 512, ceilingSec = Some(300),
+      expected = Map(
+        "dedup_clusters" -> 20.6, "dedup_minhash_pairs" -> 28.9,
+        "dedup_simhash" -> 41.3, "gopher_rules" -> 18.2,
+        "holt_winters" -> 2.6, "line_dedup" -> 46.8,
+        "mm_audio_fingerprint" -> 33.1, "naive_bayes_score" -> 37.2,
+        "semantic_dedup_sharded" -> 24.7, "corpus_pretrain_pipeline" -> 11.2),
+      names = Seq("dedup_minhash_pairs", "dedup_simhash", "dedup_clusters",
+        "line_dedup", "semantic_dedup_sharded", "mm_audio_fingerprint",
+        "naive_bayes_score", "gopher_rules", "holt_winters",
+        "corpus_pretrain_pipeline")),
+    ProbeBlock("x1000organic", "/tmp/graft_sfx1000organic", 1000, organic = true,
+      partitions = 512, ceilingSec = Some(300),
+      expected = Map("line_dedup" -> 49.1, "naive_bayes_score" -> 74.0),
+      names = Seq("line_dedup", "naive_bayes_score")))
+
+  /** Probed queries that read orders/lineitem/customer: a block clones
+    * the trade tables only when it runs one of them. */
+  val tradeQueries = Set("graph_pagerank", "graph_triangles", "spearman_daily",
+    "window_range_frames", "mood_median_test", "welch_anova")
+
+  /** Per-query headline median and min, in first-timed order. */
+  private final case class Headline(med: Seq[(String, Double)], min: Seq[(String, Double)]) {
+    val total: Double = med.map(_._2).filter(_ >= 0).sum
+    val totalMin: Double = min.map(_._2).filter(_ >= 0).sum
+  }
+
+  /** Release the previous measurement's cached/checkpointed blocks
+    * before timing the next (outside the timed section); dead blocks
+    * otherwise accumulate across the whole run until the JVM OOMs.
+    * BLOCKING unpersist: async eviction lets the next query's ramp-up
+    * race the drain. Streaming queries land in `graft_stream_*` memory
+    * sinks (every sink is named through runToMemory) whose driver-side
+    * buffers are reachable only through the temp view, not through the
+    * cache manager or persistent RDDs, so those views are dropped too.
+    */
+  def release(spark: SparkSession): Unit = {
+    spark.sqlContext.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = true))
+    spark.catalog.listTables().collect()
+      .filter(_.name.startsWith("graft_stream_"))
+      .foreach(t => spark.catalog.dropTempView(t.name))
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
+    val pins = loadPins(PinRecords._1, PinRecords._2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
@@ -76,62 +343,22 @@ object Bench {
     val spark = GraftSession.build("graft-bench", s"local[$cpus]")
     spark.sparkContext.setLogLevel("ERROR")
 
-    // ---- global wall budget (r10 verdict #1). Measured from bench
-    // main entry: sbt launch/compile land outside it, so the default
-    // leaves ~1,000 s of sbt margin inside the observed ~3,600 s
-    // driver kill zone.
+    // Measured from bench main entry: sbt launch/compile land outside
+    // it, so the default leaves sbt margin inside a ~3,600 s harness
+    // kill.
     val benchStartNanos = System.nanoTime()
     def elapsedS(): Double = (System.nanoTime() - benchStartNanos) / 1e9
-    // 2600 → 2900 (round 13): the headline grew to ~437 queries and
-    // r13 rehearsal 1 budget-sentineled the ENTIRE ×1000 block at
-    // 2,746 s elapsed; the observed driver kill zone is ~3,600 s
-    // from process start and warm sbt launch+compile lands in
-    // ~60–120 s, so 2,900 s of bench wall still leaves ~580 s of
-    // kill margin.
     val budgetS =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "2900").toDouble
     def budgetLeft(): Boolean = elapsedS() < budgetS
-    val SkippedBudget = -3.0
-    val UnknownName = -4.0
 
-    // SPARK_GRAFT_BENCH_ONLY=a,b,c → time only those queries (local
-    // iteration aid; the driver always runs the full set).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
-    /** Release the PREVIOUS measurement's cached/localCheckpointed
-      * blocks before timing the next (outside the timed section).
-      * Queries rebuild their own checkpoints per invocation, so
-      * nothing is shared across runs — but without release the dead
-      * blocks accumulate for the whole full-surface × 4-invocation
-      * session (checkpointed count tables are corpus-model-sized) and
-      * the 8 GiB harness JVM eventually OOMs mid-phase. BLOCKING
-      * unpersist: async eviction lets the next query's ramp-up race
-      * the drain (observed OOM in the x100 CC join after a 57 s
-      * semantic_dedup run even though each query fits alone).
-      */
-    def releaseState(): Unit = {
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = true))
-      // Streaming queries land in uniquely-named memory-sink tables
-      // (runToMemory) whose driver-side row buffers — corpus-sized
-      // for the curate/dedup replays — are reachable through the temp
-      // view, NOT through the cache manager or persistent RDDs. The
-      // streaming queries × 4 invocations left multiple GB pinned by
-      // round's end: the ×100 dedup_clusters shuffle (fine alone)
-      // OOM'd a heap that clearCache had "drained". Every streaming
-      // sink is named through runToMemory, so the prefix is the
-      // complete set.
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      System.gc()
-    }
-    def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-        dir: String = sfDir, release: Boolean = true): Double = {
-      if (release) releaseState()
+    def run(name: String, fn: (SparkSession, String) => DataFrame,
+        dir: String = sfDir, releaseFirst: Boolean = true): Double = {
+      if (releaseFirst) release(spark)
       val t0 = System.nanoTime()
       try fn(spark, dir).write.format("noop").mode("overwrite").save()
       catch {
@@ -151,17 +378,9 @@ object Bench {
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
         .getSystemLoadAverage
 
-    // ---- START LOAD GATE (r12 verdict #2: BENCH_r12 started at
-    // load_avg 5.86 and paid with a 2.3-2.6×-inflated ×1000 block —
-    // under the 3× load-suspect bar, so nothing self-flagged — plus
-    // 3 budget sentinels; the harness RECORDED the load but did not
-    // act on it). Now the load feeds the decision: wait-and-retry
-    // until the 1-min load drops below the gate or the wait budget
-    // expires; the wait is inside elapsedS(), so a box that never
-    // quiets converts the wait into budget sentinels rather than
-    // silently-inflated numbers. The decision is emitted in the
-    // record (`load_gate*` fields) so a reader can see whether the
-    // gate passed, waited, or was waived.
+    // START LOAD GATE: the wait is inside elapsedS(), so a box that
+    // never quiets converts the wait into budget sentinels rather than
+    // silently-inflated numbers.
     val loadGate =
       sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE", "1.5").toDouble
     val loadGateWaitS =
@@ -183,13 +402,9 @@ object Bench {
       f"[bench] load gate WAIVED after ${loadGateWaitedS}%.0f s: " +
         f"load_avg_start $loadStart%.2f still > $loadGate%.2f — numbers may be inflated")
 
-    // Per-block environment evidence (BENCH_r08 lesson: the official
-    // record showed 148.7 s for a query a judge's isolated re-run
-    // measures at 33.2 s — environmental inflation with no way to
-    // tell it apart from a code regression). Each block records the
-    // OS load average, cumulative JVM GC time, and heap-in-use at its
-    // start and end, so a reader can see WHEN the JVM/machine was
-    // degraded rather than inferring it from suspicious numbers.
+    // Per-block environment evidence (load average, cumulative GC
+    // time, heap in use at start and end), so a reader can tell an
+    // inflated environment from a code regression.
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -198,268 +413,116 @@ object Bench {
     def heapUsedMb(): Long =
       java.lang.management.ManagementFactory.getMemoryMXBean
         .getHeapMemoryUsage.getUsed / (1024 * 1024)
-    val blockEnv = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val blockEnv = mutable.LinkedHashMap.empty[String, String]
 
-    // ---- incremental result state + flush (BENCH_r09 lesson: the
-    // JSON was written ONCE at the very end, and the driver's ceiling
-    // kill — rc 124 — lost every block of a ~95%-complete run). All
-    // result maps are mutable and `flush()` rewrites the FULL record
-    // to SPARK_GRAFT_BENCH_OUT after every single measurement, so a
-    // kill at any point leaves everything completed so far parseable.
-    // A flush is one ~10 KB local file write — noise next to the
-    // per-query blocking unpersist + System.gc it follows.
-    val sfx10 = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val sfx100 = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val sfx1000 = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    // ORGANIC-growth probes (r13 verdict #4): the ×N clone corpus is
-    // exact text replicas, so the clone-collapsed queries do
-    // base-corpus work inside an N×-labeled probe. These two maps
-    // re-time the collapsed queries on a PERTURBED documents clone
-    // (every replica's text made unique — probe-only data, the
-    // oracle never reads a clone dir), so the record carries BOTH
-    // numbers: collapsed (sf_x100/sf_x1000) and organic.
-    val sfx100org = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val sfx1000org = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val loadSuspect = scala.collection.mutable.LinkedHashSet.empty[String]
+    // All result maps are mutable and `flush()` rewrites the FULL record
+    // after every single measurement.
+    val probeResults = blocks.map(b => b.tag -> mutable.LinkedHashMap.empty[String, Double]).toMap
+    val loadSuspect = mutable.LinkedHashSet.empty[String]
     // name -> timed samples (newest first); median/min derived at
     // flush time so partial passes still yield a usable record.
-    val headlineSamples =
-      scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
+    val headlineSamples = mutable.LinkedHashMap.empty[String, List[Double]]
     val benchOut = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    def medMin(samples: List[Double]): (Double, Double) = {
-      val ts = samples.filter(_ >= 0).sorted
-      if (ts.isEmpty) (-1.0, -1.0)
-      else {
-        val med =
-          if (ts.length % 2 == 1) ts(ts.length / 2)
-          else (ts(ts.length / 2 - 1) + ts(ts.length / 2)) / 2.0
-        (med, ts.head)
-      }
-    }
-    def jsonMap(m: collection.Map[String, Double]): String =
-      m.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-        .mkString("{", ",", "}")
-    def buildJson(complete: Boolean): String = {
-      val stats = headlineSamples.map { case (n, ss) => n -> medMin(ss) }
-      val results = stats.map { case (n, (med, _)) => n -> med }
-      val mins = stats.map { case (n, (_, mn)) => n -> mn }
-      val total = results.valuesIterator.filter(_ >= 0).sum
-      val totalMin = mins.valuesIterator.filter(_ >= 0).sum
+    def jsonPairs(m: Seq[(String, Double)]): String =
+      m.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }.mkString("{", ",", "}")
+    def jsonMap(m: Iterable[(String, Double)]): String = jsonPairs(m.toSeq.sortBy(_._1))
+    def jsonNames(ns: Iterable[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def flush(complete: Boolean = false): (String, Headline) = {
+      val stats = headlineSamples.toSeq.map { case (n, ss) => n -> medMin(ss) }
+      val h = Headline(stats.map { case (n, (med, _)) => n -> med },
+        stats.map { case (n, (_, mn)) => n -> mn })
+      val ratio = envRatio(h.min, pins)
+      val regressedNames = h.min.collect {
+        case (n, mn) if mn >= 0 && pins.get(n).exists(regressed(mn, _, ratio)) => n
+      }.sorted
       val blockEnvJson = blockEnv
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val loadSuspectJson =
-        loadSuspect.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // regression gate (r11 verdict #5): min > 2x the pinned min
-      // AND > pin + 0.25 s. The MIN is the load-robust statistic — a
-      // min that doubled is a code regression; the absolute floor
-      // keeps sub-second queries (whose fixed JVM/scheduling overhead
-      // dominates — rehearsal 2 measured a 0.196 s pin sampling at
-      // 0.396 s on identical code) from flagging on noise while the
-      // heavy queries, where regressions matter, still gate at 2x.
-      // Unpinned (post-refresh) queries are skipped until the next
-      // manifest refresh.
-      //
-      // ENV NORMALIZATION (round 13): r13 rehearsal 1 measured a
-      // UNIFORM 1.21 median min-ratio across all 422 pinned queries
-      // (none above 2x) — a box-level slowdown, invisible to
-      // load_avg inside the VM, that tripped six sub-second pins at
-      // once. The gate now scales every pin by the suite-wide MEDIAN
-      // ratio (floored at 1): a single-query code regression cannot
-      // move the median of 400+ ratios, so it still flags at ~2x,
-      // while a global environment shift is discounted by exactly
-      // its own factor. A global CODE regression would be hidden
-      // here by design — but it is precisely what the headline
-      // total vs the prior record shows; the per-query gate exists
-      // to LOCALIZE, not to detect global drift. The applied factor
-      // is emitted as `pin_env_ratio`.
-      val pinRatios = mins.toSeq.collect {
-        case (n, mn) if mn >= 0 =>
-          BenchPins.headlineMinSf01.get(n)
-            .collect { case p if p > 0.05 => mn / p }
-      }.flatten.sorted
-      val envRatio =
-        if (pinRatios.isEmpty) 1.0
-        else math.max(1.0, pinRatios(pinRatios.length / 2))
-      val regressed = mins.collect {
-        case (n, mn) if mn >= 0 &&
-          BenchPins.headlineMinSf01.get(n)
-            .exists(p => mn > p * envRatio * 2.0 &&
-              mn > p * envRatio + 0.25) => n
-      }.toSeq.sorted
-      val regressedJson = regressed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","value_min":$totalMin%.3f,"complete":$complete,"load_avg_start":$loadStart%.2f,"load_avg_end":${loadAvg()}%.2f,"load_gate":$loadGate%.2f,"load_gate_waited_s":$loadGateWaitedS%.1f,"load_gate_ok":$loadGateOk,"cpus":$cpus,"queries":${jsonMap(results)},"queries_min":${jsonMap(mins)},"runs_per_query":$runsPerQuery,"scale_order":"headline_first_then_x10_x100_x1000","scale_probe_runs":"min_of_2_fast_confirm_skip_x100_x1000_expected_guard","bench_budget_s":$budgetS%.0f,"elapsed_s":${elapsedS()}%.1f,"skip_codes":{"failed":-1,"timeout":-2,"skipped_budget":-3,"unknown_name":-4},"pin_env_ratio":$envRatio%.3f,"regressed":$regressedJson,"load_suspect":$loadSuspectJson,"block_env":$blockEnvJson,"sf_x10":${jsonMap(sfx10)},"sf_x100":${jsonMap(sfx100)},"sf_x1000":${jsonMap(sfx1000)},"sf_x100_organic":${jsonMap(sfx100org)},"sf_x1000_organic":${jsonMap(sfx1000org)},"sf":"$sfDir"}"""
-    }
-    def flush(complete: Boolean = false): String = {
-      val json = buildJson(complete)
+      def sf(tag: String) = jsonMap(probeResults(tag))
+      val json = f"""{"metric":"total","value":${h.total}%.3f,"unit":"sec","value_min":${h.totalMin}%.3f,"complete":$complete,"load_avg_start":$loadStart%.2f,"load_avg_end":${loadAvg()}%.2f,"load_gate":$loadGate%.2f,"load_gate_waited_s":$loadGateWaitedS%.1f,"load_gate_ok":$loadGateOk,"cpus":$cpus,"queries":${jsonMap(h.med)},"queries_min":${jsonMap(h.min)},"runs_per_query":$runsPerQuery,"scale_order":"headline_first_then_x10_x100_x1000","scale_probe_runs":"min_of_2_fast_confirm_skip_x100_x1000_expected_guard","bench_budget_s":$budgetS%.0f,"elapsed_s":${elapsedS()}%.1f,"skip_codes":{"failed":-1,"timeout":-2,"skipped_budget":-3,"unknown_name":-4},"pin_env_ratio":$ratio%.3f,"regressed":${jsonNames(regressedNames)},"load_suspect":${jsonNames(loadSuspect)},"block_env":$blockEnvJson,"sf_x10":${sf("x10")},"sf_x100":${sf("x100")},"sf_x1000":${sf("x1000")},"sf_x100_organic":${sf("x100organic")},"sf_x1000_organic":${sf("x1000organic")},"sf":"$sfDir"}"""
       Files.writeString(Paths.get(benchOut), json)
-      json
+      (json, h)
     }
 
-    def measureBlock[T](name: String)(body: => T): T = {
+    def measureBlock(name: String)(body: => Unit): Unit = {
       val (l0, g0, h0, t0) = (loadAvg(), gcMillis(), heapUsedMb(), System.nanoTime())
       // Placeholder so a mid-block kill shows WHICH block was live.
       blockEnv(name) = s"""{"status":"in_progress","load_start":$l0}"""
       flush()
-      val r = body
+      body
       val secs = (System.nanoTime() - t0) / 1e9
       blockEnv(name) =
         f"""{"load_start":$l0%.2f,"load_end":${loadAvg()}%.2f,"gc_ms":${gcMillis() - g0},"heap_mb_start":$h0,"heap_mb_end":${heapUsedMb()},"wall_sec":$secs%.1f}"""
       flush()
-      r
     }
 
-    // ---- HEADLINE BLOCK — FIRST and budget-exempt (r10 verdict #1:
-    // two consecutive driver kills ate whichever block ran last, and
-    // the headline is the one block that constitutes the official
-    // metric). NO separate warmup pass (round 11): a full untimed
-    // warmup measured ~770 s of wall — paid to remove only the
-    // ~0.1-0.3 s/query of first-run JIT from pass 1, a ≤ ~120 s bias
-    // on the MEDIAN across the whole suite (the r11 rehearsal
-    // numbers). The min statistic never needed it: pass 2 runs warm,
-    // and min-of-2 takes it. So pass 1 doubles as the warmup (its
-    // samples carry JIT — documented, honest-direction: the median
-    // can only OVERSTATE cost), and the saved ~650 s is what keeps
-    // headline + probes inside the global budget. `runsPerQuery`
-    // timed PASSES over the whole suite (pass-wise rather than
-    // back-to-back per query, so a partial flush after pass 1
-    // already carries one sample for every query — and the samples
-    // of one query are decorrelated in time, which is what min-of-N
-    // wants). Median + min reported per query.
-    //
-    // Headline fast-confirm (late round 10): pass 2 is skipped for a
-    // query whose first sample is already ≤ 3 s — load only INFLATES,
-    // so keeping the small first sample is the conservative
-    // direction; the heavy tail — the queries a regression would
-    // actually move — is exactly the set that still gets both passes.
-    val headlineFastSec =
-      sys.env.getOrElse("SPARK_GRAFT_HEADLINE_FAST_SEC", "3").toDouble
+    // HEADLINE BLOCK — first and budget-exempt. No separate warmup
+    // pass: pass 1 doubles as the warmup (its JIT share can only
+    // overstate the median) and min-of-N takes the warm pass 2. Passes
+    // run over the whole suite rather than back-to-back per query, so a
+    // partial flush after pass 1 carries one sample for every query
+    // and one query's samples are decorrelated in time.
     measureBlock("headline") {
       for (pass <- 1 to runsPerQuery) {
         queries.foreach { case (n, fn) =>
           val prior = headlineSamples.getOrElse(n, Nil)
-          // Fast-confirm skip — but NEVER for a sample that would
-          // flag the regression gate (rehearsal-1 lesson: sub-3s
-          // queries kept a single JIT/load-inflated pass-1 sample and
-          // landed in `regressed` on one observation; a pinned query
-          // above 2x its pin earns the confirming run, so the gate
-          // only ever fires on a min-of-2).
-          val valid = prior.filter(_ >= 0)
-          // The guard mirrors the FULL regression-gate predicate
-          // (min > 2×pin AND min > pin + 0.25 s) — r12 advice: with
-          // only the 2× half, a sub-second query sitting just above
-          // 2× its pin but under pin + 0.25 could never flag yet
-          // always lost the skip and burned a confirming run.
-          val skip = pass > 1 && valid.nonEmpty &&
-            valid.forall(_ <= headlineFastSec) &&
-            BenchPins.headlineMinSf01.get(n)
-              .forall(p => !(valid.min > p * 2.0 && valid.min > p + 0.25))
-          if (!skip) {
-            val t = run(n, fn)
-            headlineSamples(n) = t :: prior
+          if (!(pass > 1 && fastConfirmSkip(prior, pins.get(n)))) {
+            headlineSamples(n) = run(n, fn) :: prior
             flush()
           }
         }
       }
     }
 
-    // ---- scale probes (AFTER the headline — see above). The probe
-    // corpora: documents/embeddings duplicated with shifted doc ids
-    // (every doc gains N−1 exact clones, the realistic web-corpus
-    // dedup regime), events duplicated with shifted USER ids (N×
-    // users, same per-user session shape). The capped/banded paths
-    // must grow ~linearly; embed-cosine is the exact-by-design O(n²)
-    // baseline. semantic_dedup TRAINS its codebook with k = ⌈√n⌉, so
-    // its pair join is ~n^1.5 and is expected SUB-quadratic (the
-    // fixed-k quadratic regime is gone — see DedupQueries C32).
-    val scaleProbe = sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE", "1") != "0"
-    // Local-iteration aid: SPARK_GRAFT_REUSE_CLONES=1 skips rewriting
-    // a clone dir that already has all its tables (the ×1000 write is
-    // minutes). The driver never sets it, so official runs always
-    // regenerate from the current base tables.
-    val reuseClones = sys.env.getOrElse("SPARK_GRAFT_REUSE_CLONES", "0") == "1"
-    def cloneTables(dir: String, copies: Int, withTrade: Boolean = false): Unit = {
-      import org.apache.spark.sql.functions.{broadcast, col, lit, max}
-      // events.ts is TIMESTAMP(NANOS): read as epoch-nano bigint (the
-      // GraftSession.table convention — set explicitly here so the
-      // probe doesn't depend on an events-reading query having run
-      // first in this session).
+    /** Writes `copies`× clones of the base tables into `dir`: documents,
+      * embeddings and events (plus the trade tables when `withTrade`),
+      * or, when `organic`, documents alone with every replica's text
+      * made unique. Documents/embeddings gain shifted ids (N−1 exact
+      * clones per doc, the web-corpus dedup regime); events gain
+      * shifted USER ids (N× users, same per-user session shape).
+      */
+    def cloneTables(dir: String, copies: Int, organic: Boolean, withTrade: Boolean): Unit = {
+      import org.apache.spark.sql.functions.{broadcast, col, expr, lit, max}
+      // events.ts may be TIMESTAMP(NANOS): read as epoch-nano bigint
+      // (the GraftSession.table convention), independent of which
+      // queries ran first in this session.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val wanted = Seq("documents", "embeddings", "events") ++
-        (if (withTrade) Seq("orders", "lineitem", "customer") else Nil)
-      // Reuse guard is manifest-based (r9 ADVICE): _SUCCESS markers
-      // alone can't detect a stale clone built from DIFFERENT base
-      // data or a different copy count in the same dir — reuse would
-      // silently benchmark wrong data. The manifest pins (base dir,
-      // copies, generated tables); any mismatch regenerates.
-      val manifestPath = Paths.get(s"$dir/_graft_manifest.json")
-      val priorTables: Seq[String] =
-        if (!Files.exists(manifestPath)) Nil
-        else {
-          val m = Files.readString(manifestPath)
-          if (!m.contains("\"base\":\"" + sfDir + "\"") ||
-              !m.contains("\"copies\":" + copies + ",")) Nil
-          else "\"([a-z_]+)\"".r
-            .findAllMatchIn(m.substring(m.indexOf("\"tables\"") + 8))
-            .map(_.group(1)).toSeq
-        }
-      // Manifest-verified tables (entry present AND _SUCCESS on disk)
-      // survive a reuse; only the rest regenerate — e.g. adding trade
-      // tables to an existing docs/events clone dir doesn't rewrite
-      // the (minutes-long at ×1000) corpus tables.
-      val valid = priorTables.filter(t =>
-        Files.exists(Paths.get(s"$dir/$t.parquet/_SUCCESS")))
-      val toGen = if (reuseClones) wanted.filterNot(valid.contains) else wanted
-      if (toGen.isEmpty) return
       def duplicate(tbl: String, idCols: Seq[String],
           fixedShifts: Map[String, Long] = Map.empty): Map[String, Long] = {
-        val basePath = s"$sfDir/$tbl.parquet"
-        val t = spark.read.parquet(basePath)
-        // Shifts derive from the BASE table (max id + 1) — computed
-        // even for skipped tables, since a regenerated table's shift
-        // may depend on a reused one's (lineitem on orders).
+        val t = spark.read.parquet(s"$sfDir/$tbl.parquet")
         val shifts = idCols.map { c =>
           c -> fixedShifts.getOrElse(c,
-            t.agg(max(col(c))).head().get(0)
-              .asInstanceOf[Number].longValue() + 1L)
+            t.agg(max(col(c))).head().get(0).asInstanceOf[Number].longValue() + 1L)
         }
-        if (!toGen.contains(tbl)) return shifts.toMap
-        // Broadcast-crossJoin against a replica-id range, NOT an
-        // N-way union: a reduce of `copies` DataFrames builds a
-        // plan with `copies` scan branches — at the ×1000 probe
-        // that is an unplannable 1000-leaf tree, while this is one
-        // scan × a 8-byte-per-replica broadcast (same output rows).
-        //
-        // Round-13 harness fix (guide §2.5 — this is clone
-        // GENERATION, not a measurement): the keyless
-        // `.repartition(8..64)` below round-robins the expanded rows
-        // so every written file's dictionary spans the full
-        // distinct-content set — the r12 on-disk layout the probe
-        // pins were taken against (a replica-CLUSTERED layout
-        // measured 13× smaller on disk and its scan size estimate
-        // flipped dedup_minhash_pairs ×100 to a broadcast-heavy
-        // initial plan: 4.1 → 23 s — so the round-robin mix stays).
-        // What goes: sortBeforeRepartition — at ×100 it sorted the
-        // 60M-row expanded lineitem inside ONE task before the
-        // shuffle. The sort exists to keep row→partition assignment
-        // reproducible under partial fetch-failure recomputes
-        // (SPARK-38388); clone generation is a deterministic local
-        // pipeline with no fetch-failure regime, and the written
-        // CONTENT is the same multiset under any assignment, so the
-        // sort buys nothing here. Scoped to this write and restored.
-        val targetTasks = math.max(8, math.min(64, copies))
+        // Broadcast-crossJoin against a replica-id range, NOT an N-way
+        // union: at ×1000 a union is an unplannable 1000-leaf tree.
+        // The keyless repartition round-robins the expanded rows so
+        // every file's dictionary spans the full distinct-content set
+        // (the layout the probe pins were taken against; a
+        // replica-clustered layout flips dedup_minhash_pairs ×100 to a
+        // broadcast-heavy plan). sortBeforeRepartition only keeps
+        // row→partition assignment reproducible under fetch-failure
+        // recomputes; clone content is the same multiset under any
+        // assignment, and at ×100 the sort runs in ONE task.
         val priorSort =
           spark.conf.get("spark.sql.execution.sortBeforeRepartition", "true")
         spark.conf.set("spark.sql.execution.sortBeforeRepartition", "false")
         try {
-          val expanded = t
-            .crossJoin(broadcast(
-              spark.range(copies.toLong).select(col("id").as("_rep"))))
-          shifts.foldLeft(expanded) { case (df, (c, shift)) =>
-              df.withColumn(c, col(c) + col("_rep") * lit(shift))
-            }
-            .drop("_rep")
-            .repartition(targetTasks)
+          val shifted = shifts.foldLeft(t.crossJoin(broadcast(
+              spark.range(copies.toLong).select(col("id").as("_rep"))))) {
+            case (df, (c, shift)) => df.withColumn(c, col(c) + col("_rep") * lit(shift))
+          }
+          // Organic text: a per-replica token after every 8th token
+          // (+12.5% tokens) defeats the doc-fingerprint clone collapse
+          // while each replica keeps the base corpus's near-duplicate
+          // structure; cross-replica 3-gram Jaccard ≈ 0.46 stays under
+          // the 0.6 setsim/dedup thresholds, so no N² pair explosion.
+          val out = if (!organic) shifted else shifted.withColumn("text", expr(
+            """array_join(transform(split(text, ' '), (t, i) ->
+              |  CASE WHEN i % 8 = 7
+              |       THEN concat(t, ' q', CAST(_rep AS STRING))
+              |       ELSE t END), ' ')""".stripMargin))
+          out.drop("_rep")
+            .repartition(math.max(8, math.min(64, copies)))
             .write.mode("overwrite").parquet(s"$dir/$tbl.parquet")
         } finally {
           spark.conf.set("spark.sql.execution.sortBeforeRepartition", priorSort)
@@ -467,444 +530,20 @@ object Bench {
         shifts.toMap
       }
       duplicate("documents", Seq("doc_id"))
-      duplicate("embeddings", Seq("vec_id"))
-      duplicate("events", Seq("event_id", "user_id"))
-      if (withTrade) {
-        // trade graph for the graph_pagerank probe: lineitem's
-        // orderkey must shift by the SAME stride as orders' so each
-        // replica's join stays closed — replicas become disjoint
-        // copies of the graph, the honest ×N shape
+      if (!organic) {
+        duplicate("embeddings", Seq("vec_id"))
+        duplicate("events", Seq("event_id", "user_id"))
+      }
+      if (!organic && withTrade) {
+        // lineitem's orderkey and customer's custkey shift by the SAME
+        // stride as orders' keys, so each replica's joins stay closed:
+        // replicas are disjoint copies of the graph (c_nationkey
+        // unshifted → every replica re-seeds on its nation-0 cohort).
         val oShifts = duplicate("orders", Seq("o_orderkey", "o_custkey"))
         duplicate("lineitem", Seq("l_orderkey", "l_suppkey"),
           Map("l_orderkey" -> oShifts("o_orderkey")))
-        // customer for the graph_ppr seed join: c_custkey must shift
-        // by the SAME stride as o_custkey so each replica's seed set
-        // stays closed over its own copy of the graph (c_nationkey
-        // unshifted → every replica re-seeds on its nation-0 cohort)
         duplicate("customer", Seq("c_custkey"),
           Map("c_custkey" -> oShifts("o_custkey")))
-      }
-      // Valid prior tables survive (same base + copies); anything
-      // regenerated above joins them. A base/copies mismatch resets
-      // the list to exactly what was just written.
-      Files.writeString(manifestPath,
-        s"""{"base":"$sfDir","copies":$copies,"tables":[${
-          (priorTables ++ wanted).distinct.sorted
-            .map("\"" + _ + "\"").mkString(",")}]}""")
-    }
-
-    /** ORGANIC ×N documents clone (r13 verdict #4): like
-      * `cloneTables`' documents branch, but every replica's text is
-      * made UNIQUE by injecting a per-replica token after every 8th
-      * token (+12.5% token volume — an every-token injection was
-      * rehearsed first and rejected: it doubles the corpus, turning
-      * the ×100 label into ×200). Any injection anywhere defeats the
-      * DOC-fingerprint clone-collapse preambles, so the collapsed
-      * queries pay token-linear organic growth — the shape the ×N
-      * label claims. Within a replica the base corpus's
-      * duplicate/near-duplicate structure is preserved (all members
-      * of a replica get the identical injection); ACROSS replicas a
-      * 3-gram-shingle universe loses ~3/8 of its members to the
-      * injections, so cross-replica Jaccard ≈ (1−f)/(1+f) ≈ 0.46 —
-      * under the τ = 0.6 setsim/dedup thresholds, no N² pair
-      * explosion. Probe-only data: the oracle never reads a clone
-      * dir, and the plain sf_x100/sf_x1000 rows still measure the
-      * collapsed (exact-replica) regime alongside.
-      */
-    def cloneDocsOrganic(dir: String, copies: Int): Unit = {
-      import org.apache.spark.sql.functions.{broadcast, col, expr, lit, max}
-      val manifestPath = Paths.get(s"$dir/_graft_manifest.json")
-      val fresh = {
-        !Files.exists(manifestPath) || {
-          val m = Files.readString(manifestPath)
-          !m.contains("\"base\":\"" + sfDir + "\"") ||
-            !m.contains("\"copies\":" + copies + ",") ||
-            !m.contains("\"perturb\":\"token-rep-inject-8\"")
-        } || !Files.exists(Paths.get(s"$dir/documents.parquet/_SUCCESS"))
-      }
-      if (!fresh && reuseClones) return
-      val t = spark.read.parquet(s"$sfDir/documents.parquet")
-      val shift = t.agg(max(col("doc_id"))).head()
-        .get(0).asInstanceOf[Number].longValue() + 1L
-      val targetTasks = math.max(8, math.min(64, copies))
-      val priorSort =
-        spark.conf.get("spark.sql.execution.sortBeforeRepartition", "true")
-      spark.conf.set("spark.sql.execution.sortBeforeRepartition", "false")
-      try {
-        t.crossJoin(broadcast(
-            spark.range(copies.toLong).select(col("id").as("_rep"))))
-          .withColumn("doc_id", col("doc_id") + col("_rep") * lit(shift))
-          .withColumn("text", expr(
-            """array_join(transform(split(text, ' '), (t, i) ->
-              |  CASE WHEN i % 8 = 7
-              |       THEN concat(t, ' q', CAST(_rep AS STRING))
-              |       ELSE t END), ' ')""".stripMargin))
-          .drop("_rep")
-          .repartition(targetTasks)
-          .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      } finally {
-        spark.conf.set("spark.sql.execution.sortBeforeRepartition", priorSort)
-      }
-      Files.writeString(manifestPath,
-        s"""{"base":"$sfDir","copies":$copies,"perturb":"token-rep-inject-8","tables":["documents"]}""")
-    }
-
-    // ---- probe retirement (round 11, r10 verdict #2). The retired
-    // rows each carry TWO green official records (round-10 closing
-    // bench #2 + the extension-session closing bench, SURVEY §19)
-    // plus the r10 judge isolation table (VERDICT r10) — re-proving
-    // them every round is what starved two consecutive official runs
-    // of their headline block. Frozen here with their last-green
-    // pointers in SURVEY §20; SPARK_GRAFT_PROBE_RETIRED=1 resurrects
-    // the full lists for a local audit. Per-name rationales for the
-    // retired rows live in the git history of this file (round ≤ 10).
-    val includeRetired =
-      sys.env.getOrElse("SPARK_GRAFT_PROBE_RETIRED", "0") == "1"
-    val retiredX10 = Seq(
-      "dedup_simhash", "dedup_embed_cosine", "dedup_exact_docs",
-      "ann_lsh_topk", "ann_ivf_topk", "ann_recall_gate",
-      "text_bm25", "text_repetition", "text_lm_score",
-      "contamination_check", "corpus_curate_pipeline",
-      "pack_documents", "mm_frame_sample",
-      "span_dedup_docs", "semantic_dedup", "corpus_rebalance",
-      "text_entropy", "timeseries_gapfill", "timeseries_ewma",
-      "ann_ivf_trained", "tokenizer_bpe_merges", "text_quality_model",
-      "embedding_pca_project", "streaming_corpus_curate",
-      "text_pmi_bigrams", "corpus_importance_weights", "ann_pq_topk",
-      "mg_heavy_hitters", "streaming_heavy_hitters", "corpus_pps_sample",
-      "line_dedup", "doc_embed_hash", "dedup_keep_best",
-      "basket_rules", "scd2_history", "join_size_estimate",
-      "event_transitions", "rolling_distinct_users", "timeseries_cusum",
-      "text_tfidf_top_terms", "vocab_coverage", "text_lang_mixture",
-      "text_winnow_fingerprints", "winnow_dup_pairs",
-      "mm_phash_dupes", "incremental_dedup", "bloom_dedup_index",
-      "corpus_token_drift", "heaps_law_curve", "corpus_length_trim",
-      "interval_overlap_join", "graph_kcore", "attribution_last_touch",
-      "attribution_multi_touch", "ohlc_bars",
-      "item_cooccurrence_topk", "grouped_ols2",
-      "streaming_ohlc", "rfm_segments", "graph_label_prop",
-      "corpus_shuffle_order", "ma_crossover", "corpus_decontaminate",
-      "dedup_source_matrix", "length_bucket_batches", "winsorize_prices",
-      "streaming_tws_sessions", "streaming_tws_topk",
-      "streaming_incremental_dedup",
-      "event_pattern_match", "kanon_generalize", "timeseries_subseq_match",
-      "line_boilerplate_scrub", "span_dup_intervals",
-      "rocchio_classifier_score", "corpus_unimax_mix",
-      "corpus_quality_bands", "streaming_minhash_sources",
-      "streaming_bottomk_sample", "streaming_histogram_quantiles",
-      "ann_hard_negatives", "graph_hits",
-      "classifier_calibration", "ann_binary_rerank",
-      "ann_mmr_rerank", "contrastive_triplets",
-      "streaming_drift_psi", "ddsketch_order_value",
-      "timeseries_holt_trend", "streaming_drift_ks",
-      "naive_bayes_score", "corpus_doremi_weights",
-      "mm_audio_fingerprint", "asof_tolerance_purchase",
-      "timeseries_seasonal_decompose",
-      "gopher_rules", "theilsen_trend", "benford_first_digit",
-      "streaming_decayed_counts", "blocklist_tag",
-      "decision_stump_value", "streaming_ddsketch_quantiles",
-      "kendall_tau_daily", "classifier_auc", "streaming_benford",
-      "graph_ppr", "crossval_stump", "streaming_heartbeat",
-      "debounce_events", "ks_two_sample_exact", "streaming_debounce",
-      "user_behavior_profile", "corpus_datacard", "tokenizer_fertility",
-      "text_lm_heldout", "embedding_outliers",
-      "wilcoxon_signed_rank", "langid_confusion", "changepoint_value",
-      "timeseries_acf", "hist_emd_langs",
-      "zonemap_prune_stats", "inverted_index_postings",
-      "attribution_position", "streaming_drift_emd",
-      "dedup_threshold_curve", "streaming_dynamic_sessions",
-      "zonemap_overlap_factor",
-      "anova_oneway", "levene_spread", "gini_segment",
-      "mutual_information",
-      "zipf_law_fit", "token_burstiness",
-      "graph_degree_powerlaw", "graph_clustering_coeff",
-      "holt_winters", "streaming_zscore_anomaly", "streaming_anova",
-      "bh_fdr_ks", "timeseries_pacf", "graph_adamic_adar",
-      "textrank_keywords", "dedup_cluster_profile", "streaming_chisq",
-      "kruskal_wallis", "hodges_lehmann", "log_rank_conversion",
-      "streaming_page_hinkley",
-      "ljung_box", "runs_test_daily", "semdedup_eps_sweep",
-      "anderson_darling", "jonckheere_trend", "span_corruption",
-      "cohens_d", "preference_pairs",
-      "friedman_test", "mm_shot_segments",
-      "graph_modularity", "packing_efficiency",
-      "qq_shift_deciles",
-      "retrieval_eval", "mann_kendall_trend", "timeseries_ccf",
-      "sprt_decision", "self_bleu_bigram", "text_yule_k",
-      "feature_hash_vectors", "graph_jaccard_neighbors",
-      "graph_bfs_layers", "streaming_sprt",
-      "ngram_novelty", "ann_ivf_nprobe_curve",
-      "poisson_bootstrap_ci", "ann_ivfpq_topk",
-      "span_dedup_rewrite", "setsim_prefix_join")
-    val retiredX100 = Seq(
-      "dedup_exact_docs", "dedup_simhash",
-      "span_dedup_docs", "semantic_dedup",
-      "ann_lsh_topk", "ann_ivf_topk", "ann_ivf_trained",
-      "mm_phash_dupes", "incremental_dedup", "bloom_dedup_index",
-      "span_dup_intervals", "line_boilerplate_scrub", "ann_ivfpq_topk",
-      "ann_binary_rerank",
-      "mm_audio_fingerprint", "naive_bayes_score",
-      "corpus_doremi_weights", "streaming_drift_ks",
-      "timeseries_holt_trend",
-      "timeseries_seasonal_decompose",
-      "gopher_rules", "theilsen_trend", "streaming_decayed_counts",
-      "blocklist_tag",
-      "decision_stump_value", "streaming_ddsketch_quantiles",
-      "kendall_tau_daily", "streaming_benford",
-      "crossval_stump", "streaming_heartbeat", "debounce_events",
-      "ks_two_sample_exact", "streaming_debounce",
-      "user_behavior_profile", "corpus_datacard", "tokenizer_fertility",
-      "text_lm_heldout", "embedding_outliers",
-      "wilcoxon_signed_rank", "langid_confusion", "changepoint_value",
-      "timeseries_acf", "hist_emd_langs",
-      "inverted_index_postings", "streaming_drift_emd",
-      "zonemap_prune_stats", "zonemap_overlap_factor",
-      "dedup_threshold_curve",
-      "anova_oneway", "levene_spread", "gini_segment",
-      "mutual_information", "zipf_law_fit", "token_burstiness",
-      "holt_winters", "streaming_anova",
-      "bh_fdr_ks", "timeseries_pacf", "textrank_keywords",
-      "dedup_cluster_profile", "streaming_chisq",
-      "kruskal_wallis", "hodges_lehmann", "log_rank_conversion",
-      "ljung_box", "runs_test_daily", "semdedup_eps_sweep",
-      "anderson_darling", "jonckheere_trend", "span_corruption",
-      "cohens_d", "preference_pairs",
-      "friedman_test", "mm_shot_segments",
-      "packing_efficiency", "qq_shift_deciles",
-      "span_dedup_rewrite", "setsim_prefix_join")
-
-    // ---- the canary set (runs every round): ~22 rows spanning every
-    // scale family, so a regression anywhere in the engine still
-    // moves at least one probe. One line of rationale each.
-    val canaryX10 = Seq(
-      "dedup_minhash_pairs",     // banded MinHash dedup family
-      "dedup_clusters",          // iterative quotient-CC join
-      "semantic_dedup_sharded",  // sharded SemDeDup production path
-      "line_dedup",              // line-grain explode dedup
-      "span_dedup_rewrite",      // heaviest span-family rewrite (ExactSubstr)
-      "ann_ivf_trained",         // trained IVF chain (train+assign+search)
-      "ann_ivfpq_topk",          // PQ residual-encode chain
-      "graph_pagerank",          // iterative graph, trade clones
-      "graph_triangles",         // heaviest one-shot graph join, trade
-      "streaming_pattern_match", // CEP ListState — largest streaming row
-      "streaming_tws_profile",   // transformWithState/RocksDB state
-      "streaming_attribution",   // chained stateful streaming
-      "sessionize_events",       // session windows over event stream
-      "corpus_pretrain_pipeline",// multi-stage corpus pipeline composite
-      "text_top_bigrams",        // token explode + TopKPerKey
-      "distinct_ngram_diversity",// heaviest text distinct shuffle
-      "setsim_prefix_join",      // PPJoin prefix-filter discipline
-      "window_range_frames",     // value-RANGE window frames, trade
-      "mannwhitney_values",      // value-grain statistics class
-      "spearman_daily",          // day-grain statistics class, trade
-      "attribution_markov",      // journey windows + model-sized solve
-      "mm_scene_cuts")           // multimodal frame-stream family
-    // ×100 canary = the ×10 canary minus rows that never had a ×100
-    // decade (sessionize_events, text_top_bigrams, graph_triangles —
-    // adding a first ×100 decade is a deliberate act, not a canary).
-    val canaryX100 = canaryX10.diff(
-      Seq("sessionize_events", "text_top_bigrams", "graph_triangles"))
-
-    // Round-11 additions: probes for queries ADDED or CHANGED since
-    // the last green record join here (and graduate to the canary or
-    // the retired list once they carry two green records).
-    val newX10 = Seq(
-      // C139: incremental IVF maintenance — assign+append+drift is
-      // linear in the batch, search rides the probed IVF shape
-      "ann_ivf_incremental",
-      // C140: RAG chunker — token-linear explode, doc-bounded chunks
-      "rag_chunk_split",
-      // C141: stable interleave of two engine rankings — rides the
-      // probed retrieval plans + one bounded merge fold per query
-      "interleaved_ranking",
-      // C142: attribute-filtered IVF search — the probed IVF shape
-      // with a pushed-down label predicate on the candidate scan
-      "ann_filtered_search",
-      // B177: two-sample Cramér-von Mises on the value grain (the
-      // mannwhitney near-constant-grain class)
-      "cramer_von_mises",
-      // B178: Page's L ordered trend over the day×type rank grid
-      // (the friedman calendar×k class)
-      "pages_trend_test",
-      // B179: Theil-U + MASE forecast accuracy over the day grid
-      // (day-grain near-constant class)
-      "theil_u_forecast",
-      // B180: Cliff's delta off the mannwhitney rank machinery
-      "cliff_delta",
-      // B181/B182: intermittent-demand fold + forecast-bias monitor
-      // (day-grain folds, the holt_winters class)
-      "croston_intermittent", "tracking_signal",
-      // D51: live decayed top-k through bounded per-type heaps
-      "streaming_topk_decay",
-      // B183: value-grain median split (the mannwhitney class)
-      "mood_median_test",
-      // B185: 8 day-grain integer-quantized folds (the holt class)
-      "ewma_alpha_sweep",
-      // C143: chunk explode + per-source distinct on 8-byte keys
-      "chunk_dedup_stats",
-      // B186: k-grain sufficient stats (the anova_oneway class)
-      "welch_anova",
-      // B187: the friedman grid + one day-grain range rank
-      "quade_test",
-      // C146: frame-stream explode (the mm linear family)
-      "mm_audio_vad_segments",
-      // C147: brute-force |Q|×corpus scan (the retrieval_eval class)
-      "label_noise_screen",
-      // C148: map-only hash + keyed count (the blocklist_tag class)
-      "stratified_kfold_split",
-      // B188: value-grain prefix pass (the mannwhitney/cvm class)
-      "energy_distance",
-      // C150: token-linear chunk explode (the C140 class)
-      "text_sttr")
-    // No probe, by rationale: B184 cochran_armitage (one 7-group
-    // map-side agg — the 2-cell-agg class); C144 langid_kappa (the
-    // probed C108 map-only pass + a model-sized matrix); C145
-    // retrieval_recall_curve and C149 embedding_dim_truncation_eval
-    // (probed brute-force/ANN scan class + model-sized joins — the
-    // rank_fusion/retrieval_eval rationale); B189 km_median_survival
-    // (the probed B173 duration machinery + a death-day-grain pass).
-    val newX100 = Seq(
-      "ann_ivf_incremental", "rag_chunk_split",
-      "ann_filtered_search", "cramer_von_mises", "chunk_dedup_stats",
-      "welch_anova", "quade_test", "mm_audio_vad_segments",
-      "energy_distance",
-      // round-12 additions (one line of rationale each, x10 list)
-      "ann_ivf_delete", "ann_ivfpq_filtered", "streaming_late_accounting")
-      // round-13 additions live in newX100r13 (rationales at newX10r13)
-
-    // Round-12 additions to newX10:
-    //   ann_ivf_delete — the incremental chain + one keyed delete
-    //     join + the tombstone anti-join on search;
-    //   ann_ivfpq_filtered — the probed IVF-PQ shape over a pruned
-    //     codes scan (must stay ≤ ann_ivfpq_topk);
-    //   streaming_late_accounting — row-grain stateful pass + three
-    //     single-file wave writes (the wave write is the linear part).
-    val newX10r12 = Seq(
-      "ann_ivf_delete", "ann_ivfpq_filtered", "streaming_late_accounting")
-    // Round-13 additions (one line of rationale each):
-    //   ann_graph_topk — the graph BUILD is the bucketed-pairs
-    //     NN-descent-class floor (~n²·7/2^planes): ×10 gates that the
-    //     probe-bucket join stays subquadratic at 20k vectors; search
-    //     itself is corpus-size-independent. ×100 skip BY DESIGN:
-    //     200k vectors put the build's bucketed pairs at ~4·10⁹ —
-    //     the dedup_embed_cosine exclusion class (at that scale the
-    //     build shards per bucket on a cluster, the stated contract);
-    //   streaming_conformal_gate — row-grain ordered fold over
-    //     bounded 64-counter state (the D44 zscore class, probed at
-    //     both decades there; joins ×10 as the new-shape check);
-    //   suffix_dup_stats — 5 prefix-doubling rounds, each one
-    //     doc-keyed self-join + a range-partition dense rank: token-
-    //     linear per round, probed at ×10 AND ×100 (the log-round
-    //     scale claim is exactly what the decades gate);
-    //   corpus_js_divergence — one tokenize pass + source-PAIR ×
-    //     union-vocab joins: the corpus-linear half rides the probed
-    //     tokenize shape, the pair dimension is source-count-bound
-    //     (clones keep the source set), so ×10 alone decides.
-    // No probe, by rationale (round 13): ansari_bradley — the probed
-    // value-grain prefix class (mannwhitney machinery verbatim);
-    // cox_stuart_trend / variance_ratio / periodogram_seasonal —
-    // day-grain (calendar-sized after one keyed agg);
-    // bowker_symmetry — the B65 per-user lead
-    // window + a k²-model self-join (event_transitions class);
-    // filter_agreement_alpha — ONE map-only text pass + a
-    // map-side-combinable 3-scalar agg (the blocklist_tag class);
-    // streaming_isotonic_calibration — complete-mode band agg (16
-    // cells) + model-side PAVA (the streaming_anova k-cell class);
-    // anova_effect_size — B131's probed 2-cell-agg class verbatim;
-    // theil_index — the gini_segment value-grain class (one keyed
-    // agg + model read-out); classifier_auprc / classifier_brier —
-    // ride the probed rocchio scored shape (one corpus pass) + a
-    // value-grain prefix / source-model agg.
-    val newX10r13 = Seq(
-      "ann_graph_topk", "streaming_conformal_gate", "suffix_dup_stats",
-      "corpus_js_divergence")
-    val newX100r13 = Seq("suffix_dup_stats", "streaming_conformal_gate")
-    // No probe, by rationale (round 12): jarque_bera /
-    // von_neumann_ratio / pettitt_changepoint / chow_test / dixon_q /
-    // bradley_terry — day-grain classes (one keyed day agg, the
-    // holt/acf rationale); kuiper_two_sample / yuen_trimmed_t —
-    // the probed value-grain prefix class (ks_two_sample/
-    // mannwhitney machinery verbatim); ordinal_association /
-    // isotonic_calibration — the decile_lift breakpoint-broadcast
-    // class (one corpus pass + model relation); retrieval_err —
-    // rides the probed retrieval_eval brute-force/TopKPerKey class;
-    // streaming_join_state_audit — one D7-shaped stream-stream join
-    // pass (the probed streaming_attribution chain contains the same
-    // join machinery) + two metadata-scale state-store scans;
-    // pass_at_k / capture_recapture / corpus_hhi — single
-    // map-side-combinable keyed aggs (the 2-cell-agg class);
-    // turning_point_test — day-grain (calendar-sized after one agg).
-
-    /** ADVICE r11 #4: a typo'd or renamed probe name must not vanish
-      * silently — unknown names are recorded with the -4.0 sentinel
-      * and shouted to stderr instead of being filtered out.
-      */
-    def knownProbes(names: Seq[String], tag: String,
-        sink: scala.collection.mutable.Map[String, Double]): Seq[String] = {
-      val (known, unknown) = names.distinct
-        .filter(n => only.isEmpty || only(n))
-        .partition(SparkEntry.queries.contains)
-      unknown.foreach { n =>
-        System.err.println(
-          s"[bench] UNKNOWN $tag probe name '$n' — not in SparkEntry.queries; recording -4.0")
-        sink(n) = UnknownName
-      }
-      known
-    }
-
-    val x10Names = knownProbes(
-      (if (includeRetired) retiredX10 else Nil) ++ canaryX10 ++ newX10
-        ++ newX10r12 ++ newX10r13, "x10", sfx10)
-    // queries reading orders/lineitem need the trade clone set (a
-    // BENCH_ONLY subset shouldn't pay a 10x lineitem write otherwise)
-    val tradeQueries = Set("graph_pagerank", "graph_triangles",
-      "basket_rules", "scd2_history", "join_size_estimate", "graph_kcore",
-      "item_cooccurrence_topk", "grouped_ols2",
-      "rfm_segments", "graph_label_prop", "winsorize_prices", "graph_hits",
-      "ddsketch_order_value", "benford_first_digit", "graph_ppr",
-      "spearman_daily", "timeseries_acf",
-      "window_range_frames", "zonemap_prune_stats",
-      "zonemap_overlap_factor",
-      "anova_oneway", "levene_spread", "gini_segment",
-      "mutual_information", "graph_degree_powerlaw",
-      "graph_clustering_coeff",
-      "bh_fdr_ks", "timeseries_pacf", "graph_adamic_adar",
-      "kruskal_wallis", "ljung_box", "runs_test_daily",
-      "jonckheere_trend",
-      "mann_kendall_trend", "graph_jaccard_neighbors",
-      "graph_bfs_layers", "poisson_bootstrap_ci",
-      // round-11: the median-split and Welch tests read orders
-      "mood_median_test", "welch_anova")
-
-    /** Budget-gated probe loop body: a probe past the global budget
-      * records the -3.0 sentinel instead of running (r10 verdict #1 —
-      * the skip is visible in-record, never silent).
-      */
-    def probeOrSkip(name: String, sink: scala.collection.mutable.Map[String, Double])(
-        measure: => Double): Unit = {
-      sink(name) = if (budgetLeft()) measure else SkippedBudget
-      flush()
-    }
-
-    if (scaleProbe && x10Names.nonEmpty) measureBlock("x10") {
-      val x10Dir = sys.env.getOrElse("SPARK_GRAFT_X10_DIR", "/tmp/graft_sfx10")
-      if (!budgetLeft()) { x10Names.foreach(n => { sfx10(n) = SkippedBudget }); flush() }
-      else {
-        cloneTables(x10Dir, 10,
-          withTrade = x10Names.exists(tradeQueries.contains))
-        // Partitions scale with data here too (×100 already does this
-        // at 256): 10× rows on the base 32 partitions makes iterative
-        // shuffles (pagerank, CC) pay oversized tasks; AQE coalesces
-        // the small stages back down.
-        val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_X10_PARTITIONS", "64"))
-        // try/finally: a probe that throws must not leak the scaled
-        // partition override into every later measurement in this JVM.
-        try x10Names.foreach { n =>
-          probeOrSkip(n, sfx10)(run(n, SparkEntry.queries(n), x10Dir))
-        }
-        finally spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
       }
     }
 
@@ -912,18 +551,14 @@ object Bench {
       * the probe's finding). Releases the predecessor's state OUTSIDE
       * the awaited future: after a heavy query the blocking drain +
       * GC can take seconds, and inside the future it would eat into
-      * the ceiling — a query needing ~115 s would flip to a reported
-      * timeout. This isolation is what keeps a block of corpus-scale
-      * queries inside one JVM.
+      * the ceiling.
       */
-    def runCeiling(name: String, dir: String, ceilingSec: Int,
-        tag: String): Double = {
+    def runCeiling(name: String, dir: String, ceilingSec: Int, tag: String): Double = {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
-      releaseState()
-      val f = Future(
-        run(name, SparkEntry.queries(name), dir, release = false))
+      release(spark)
+      val f = Future(run(name, SparkEntry.queries(name), dir, releaseFirst = false))
       try Await.result(f, ceilingSec.seconds)
       catch {
         case _: java.util.concurrent.TimeoutException =>
@@ -946,331 +581,58 @@ object Bench {
       }
     }
 
-    /** min-of-2 ceiling runs (r8 lesson: a single late-JVM sample
-      * carried up to 17× environmental inflation; external load can
-      * only inflate a sample, so the min is the closest observable to
-      * the engine's cost). A first-run timeout is NOT retried — the
-      * timeout IS the probe's finding, and retrying it would double
-      * the worst-case block cost for no information.
-      *
-      * Fast-confirm skip (round 10): a first sample at or under
-      * max(fastConfirmSec, ceiling × fastConfirmFrac) is kept WITHOUT
-      * the confirming run — load can only have inflated it, so
-      * skipping the retry is the conservative direction (the recorded
-      * number can only be ≥ the engine's true cost), and the scale
-      * question the ceiling gates (is this query super-linear?) is
-      * already answered by a sample well under the ceiling; the
-      * confirming run survives only for samples in the ceiling's own
-      * neighborhood, where inflation could flip the timeout verdict.
-      */
-    val fastConfirmSec =
-      sys.env.getOrElse("SPARK_GRAFT_FAST_CONFIRM_SEC", "15").toDouble
-    val fastConfirmFrac =
-      sys.env.getOrElse("SPARK_GRAFT_FAST_CONFIRM_FRAC", "0.5").toDouble
-
-    // ---- sf_x1000 probe (runs LAST since round 12 — r11 verdict #1:
-    // the ×100 canary must land in the official record, so ×100 now
-    // outranks ×1000 and the ×1000 list is TRIMMED to its
-    // verdict-bearing rows; the settled ×1000 rows — each carrying
-    // two green official records (r8/r11) plus three r11 rehearsals —
-    // are frozen in retiredX1000 below, resurrectable via
-    // SPARK_GRAFT_PROBE_RETIRED=1, last-green pointers in SURVEY
-    // §20). A THIRD decade of scale evidence for the LINEAR
-    // dedup/ANN family only (5M docs / 2M vectors — the realistic
-    // crawl-shard size). semantic_dedup is excluded BY DESIGN here
-    // the way dedup_embed_cosine is excluded at ×100: its codebook
-    // scales k = √n, so the full-corpus assign pass is the method's
-    // own n^1.5 floor (~19 min at this scale) — the capped/banded/
-    // hashed queries below are exactly what this probe gates as
-    // linear across THREE decades.
-    //
-    // Expected-value guard (r10 verdict #3): min-of-2 is not
-    // load-robust when both samples land in the same load regime
-    // (dedup_clusters ×1000: 170.5 s driver-loaded vs 12.0 s judge-
-    // isolated — a 14× spread that survived min-of-2). Each row pins
-    // the value from the last green official record (extension-
-    // session closing bench, idle box, 2026-08-16 — SURVEY §19); a
-    // sample above 3× its pin triggers up to two more samples, and a
-    // row still above 3× lands in `load_suspect` in the record.
-    val x1000Expected = Map(
-      "ann_binary_rerank" -> 3.6, "ann_lsh_topk" -> 3.5,
-      "blocklist_tag" -> 6.6, "corpus_doremi_weights" -> 4.5,
-      "dedup_clusters" -> 20.6, "dedup_exact_docs" -> 3.6,
-      "dedup_minhash_pairs" -> 28.9, "dedup_simhash" -> 41.3,
-      "gopher_rules" -> 18.2, "hist_emd_langs" -> 1.1,
-      "holt_winters" -> 2.6, "incremental_dedup" -> 9.4,
-      "line_dedup" -> 46.8, "mm_audio_fingerprint" -> 33.1,
-      "naive_bayes_score" -> 37.2, "semantic_dedup_sharded" -> 24.7,
-      "span_dedup_docs" -> 5.9, "span_dedup_rewrite" -> 7.1,
-      "span_dup_intervals" -> 3.7, "tokenizer_fertility" -> 4.6,
-      "zipf_law_fit" -> 4.0,
-      // round-12 addition (r11 verdict #7): measured 2026-08-16 on
-      // this box, idle, reused x1000 clones — 11.2 s (3.1 s at x10:
-      // the composed pipeline's corpus caps keep the tail sublinear)
-      "corpus_pretrain_pipeline" -> 11.2)
-    val x1000Probe = sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE_X1000", "1") != "0"
-    // Settled ×1000 rows (round 12): two green official records each
-    // (r8 closing + r11 official, SURVEY §19/§20) plus the three r11
-    // rehearsals — frozen; SPARK_GRAFT_PROBE_RETIRED=1 resurrects.
-    val retiredX1000 = Seq(
-      "dedup_exact_docs", "incremental_dedup", "ann_lsh_topk",
-      "span_dedup_docs", "span_dup_intervals", "ann_binary_rerank",
-      "span_dedup_rewrite", "corpus_doremi_weights", "blocklist_tag",
-      "tokenizer_fertility", "hist_emd_langs", "zipf_law_fit")
-    // Kept: the verdict-bearing heavy dedup/corpus/classifier family
-    // (the rows every round's verdict reads first), holt_winters (the
-    // r11 load_suspect — re-pinned here, r11 verdict #3), and the
-    // composed end-to-end corpus_pretrain_pipeline (r11 verdict #7:
-    // the composition is where 100 TB surprises hide).
-    val x1000Names = knownProbes(
-      (if (includeRetired) retiredX1000 else Nil) ++ Seq(
-        "dedup_minhash_pairs", "dedup_simhash", "dedup_clusters",
-        "line_dedup", "semantic_dedup_sharded",
-        "mm_audio_fingerprint", "naive_bayes_score", "gopher_rules",
-        "holt_winters", "corpus_pretrain_pipeline"), "x1000", sfx1000)
-    def runPinnedRow(name: String, dir: String, ceilingSec: Int,
-        tag: String, expected: Map[String, Double]): Double = {
-      var best = runCeiling(name, dir, ceilingSec, tag)
-      if (best < 0) return best // timeout/failure IS the finding
-      val bar = expected.get(name).map(_ * 3.0)
-      // fast-keep: a sample under the wall threshold, OR — round 13 —
-      // within 1.5x its own pin even above it (a long-but-pinned row
-      // sitting at its known cost has already answered the scale
-      // question; load can only inflate, so keeping the single
-      // sample is the conservative direction — r13 rehearsal 1
-      // measured suffix_dup_stats x100 paying a 130 s confirming run
-      // to "confirm" a value 1.2x its idle cost)
-      val fastKeep =
-        (best <= math.max(fastConfirmSec, ceilingSec * fastConfirmFrac) ||
-          expected.get(name).exists(p => best <= p * 1.5)) &&
-          bar.forall(best <= _)
-      if (!fastKeep) {
-        // confirming sample (generic min-of-2), plus — for a row
-        // still above its 3× pin — one more (verdict #3's third
-        // sample); min wins throughout.
-        var extra = 0
-        val maxExtra = if (bar.isDefined) 2 else 1
-        var continue = true
-        // budgetLeft(): a load-inflated row must not chase its pin
-        // past the global wall budget — three ceiling-length samples
-        // of one row could otherwise add ~900 s past the gate.
-        while (continue && extra < maxExtra && budgetLeft()) {
-          val s = runCeiling(name, dir, ceilingSec, tag)
-          if (s >= 0) best = math.min(best, s)
-          extra += 1
-          continue = bar.exists(best > _)
-        }
-        if (bar.exists(best > _)) {
-          loadSuspect += name
-          System.err.println(
-            f"[bench] $tag LOAD-SUSPECT $name: min $best%.1f s > 3x pinned ${expected(name)}%.1f s")
-        }
+    // PROBE BLOCKS. Every name is in SparkEntry.queries (BenchSpec);
+    // an unknown one would still be recorded as -4.0, never dropped.
+    val scaleProbe = sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE", "1") != "0"
+    for (b <- blocks) {
+      val sink = probeResults(b.tag)
+      val (names, unknown) = b.names.filter(n => only.isEmpty || only(n))
+        .partition(SparkEntry.queries.contains)
+      unknown.foreach { n =>
+        System.err.println(
+          s"[bench] UNKNOWN ${b.tag} probe name '$n' — not in SparkEntry.queries; recording -4.0")
+        sink(n) = UnknownName
       }
-      best
-    }
-    // ---- sf_x100 probe (runs BEFORE ×1000 since round 12 — r11
-    // verdict #1): the second decade for the canary families plus
-    // this round's additions. Each runs min-of-2 under a wall-clock
-    // ceiling (default 180 s — a query that can't finish a 100×
-    // corpus in that budget is reported as -2.0 "timeout", which IS
-    // the probe's finding). dedup_embed_cosine is excluded by
-    // design: it is the exact-O(n²) specification baseline and would
-    // trivially exceed any ceiling at 100× — its approximate
-    // replacements (minhash/simhash/semantic) are exactly what this
-    // probe gates.
-    val x100Probe = sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE_X100", "1") != "0"
-    // ×100 expected-value pins (r12 verdict #7: the ×1000 guard had
-    // no ×100 sibling, so the load-contamination class that inflated
-    // r12's official ×1000 block could hide in the 31-row ×100 block
-    // with no self-flag). Per row: min of the two IDLE r12 rehearsals
-    // (records/BENCH_r12_rehearsal{3,4}.json, load_avg_start
-    // 0.35/0.57); same 3×-bar → third-sample → load_suspect protocol
-    // as ×1000 via runPinnedRow.
-    val x100Expected = Map(
-      "ann_filtered_search" -> 2.3, "ann_ivf_delete" -> 11.9,
-      "ann_ivf_incremental" -> 14.7, "ann_ivf_trained" -> 7.8,
-      "ann_ivfpq_filtered" -> 7.4, "ann_ivfpq_topk" -> 7.8,
-      "attribution_markov" -> 5.6, "chunk_dedup_stats" -> 1.7,
-      "corpus_pretrain_pipeline" -> 3.7, "cramer_von_mises" -> 1.3,
-      "dedup_clusters" -> 3.7, "dedup_minhash_pairs" -> 4.1,
-      "distinct_ngram_diversity" -> 35.6, "energy_distance" -> 1.3,
-      "graph_pagerank" -> 40.1, "line_dedup" -> 4.3,
-      "mannwhitney_values" -> 1.3, "mm_audio_vad_segments" -> 2.2,
-      "mm_scene_cuts" -> 1.2, "quade_test" -> 2.0,
-      "rag_chunk_split" -> 1.4, "semantic_dedup_sharded" -> 8.5,
-      "setsim_prefix_join" -> 8.4, "span_dedup_rewrite" -> 3.2,
-      "spearman_daily" -> 0.9, "streaming_attribution" -> 10.2,
-      "streaming_late_accounting" -> 31.7,
-      "streaming_pattern_match" -> 59.4, "streaming_tws_profile" -> 14.0,
-      "welch_anova" -> 1.1, "window_range_frames" -> 2.9,
-      // round-13 rows: r13 rehearsal-1 values deflated by its 1.21
-      // uniform env ratio (the box ran ~20% slow that day)
-      "suffix_dup_stats" -> 106.0, "streaming_conformal_gate" -> 25.0)
-    val x100Names = knownProbes(
-      (if (includeRetired) retiredX100 else Nil) ++ canaryX100 ++ newX100
-        ++ newX100r13,
-      "x100", sfx100)
-    if (scaleProbe && x100Probe && x100Names.nonEmpty) measureBlock("x100") {
-      val x100Dir = sys.env.getOrElse("SPARK_GRAFT_X100_DIR", "/tmp/graft_sfx100")
-      val ceilingSec =
-        // 180 s: the heaviest legitimate query (semantic_dedup — a
-        // corpus-scaled k-means training plus clone-collapsed
-        // cluster-blocked pair join) measures ~38 s at 100×
-        // (r8, post clone-collapse; was 144 s without it); a
-        // quadratic regression would blow 10-100× past that, so the
-        // ceiling still fails loudly while not flagging the
-        // heavy-but-subquadratic query under a loaded harness.
-        sys.env.getOrElse("SPARK_GRAFT_X100_CEILING_SEC", "180").toInt
-      if (!budgetLeft()) { x100Names.foreach(n => { sfx100(n) = SkippedBudget }); flush() }
-      else {
-        cloneTables(x100Dir, 100,
-          withTrade = x100Names.exists(tradeQueries.contains))
-        // Partitions scale with data (the README cluster guidance): at
-        // 100× rows with the base 32 shuffle partitions, per-task state
-        // outgrows the 4 GiB harness JVM (observed: dedup_clusters'
-        // iterative CC join OOMs). 256 partitions ⇒ ~8× smaller tasks;
-        // AQE coalesces the small stages back down.
-        val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_X100_PARTITIONS", "256"))
-        try x100Names.foreach { n =>
-          probeOrSkip(n, sfx100)(
-            runPinnedRow(n, x100Dir, ceilingSec, "x100", x100Expected))
-        }
-        finally spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
-      }
-    }
-
-    // ---- ORGANIC-growth probes (r13 verdict #4): the collapsed
-    // queries' plain ×N rows gate the clone-collapse; these rows gate
-    // token-linear growth on unique text. documents-only dir: all
-    // four queries read only the documents table. The ×100 organic
-    // block runs BEFORE ×1000 (it is minutes; the r13 official record
-    // shows ×1000 already sacrificing to the budget, and a block
-    // placed after it would never appear in an official record); the
-    // ×1000 organic block runs dead last.
-    val organicProbe =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_PROBE_ORGANIC", "1") != "0"
-    // Pins: min-of-2 idle r14 rehearsal on the round-14 box (load
-    // < 0.2; that box ran ~1.3× slower than the r12 pin box — see
-    // OPTIMIZATION_r14.md "Environment bisect" — so these pins are
-    // conservative for a faster driver box).
-    val x100OrgExpected = Map(
-      "line_dedup" -> 9.2, "naive_bayes_score" -> 16.2,
-      "suffix_dup_stats" -> 149.4)
-    val x1000OrgExpected = Map(
-      "line_dedup" -> 49.1, "naive_bayes_score" -> 74.0)
-    // setsim_prefix_join is NOT probed organically: rehearsed and
-    // rejected — at ×100 UNIQUE docs the un-collapsed PPJoin's
-    // window/df/verify passes exhaust the harness JVM's execution
-    // memory (UNABLE_TO_ACQUIRE_MEMORY at 256 partitions / 32 tasks).
-    // That is the r12-era finding that motivated the collapse: organic
-    // 100× set-similarity needs a cluster-sized heap, not a 16 g local
-    // JVM. Its collapsed ×100 row still runs in sf_x100.
-    val x100OrgNames = knownProbes(
-      Seq("line_dedup", "naive_bayes_score", "suffix_dup_stats"),
-      "x100organic", sfx100org)
-    if (scaleProbe && organicProbe && x100OrgNames.nonEmpty)
-      measureBlock("x100organic") {
-        val orgDir = sys.env.getOrElse("SPARK_GRAFT_X100ORG_DIR",
-          "/tmp/graft_sfx100organic")
-        // suffix_dup_stats pays ~O(L log L) suffix doubling over 100×
-        // UNIQUE text — legitimately past the collapsed-row 180 s
-        // ceiling on a slow box, so this block gets its own.
-        val ceilingSec = sys.env.getOrElse(
-          "SPARK_GRAFT_X100ORG_CEILING_SEC", "300").toInt
-        if (!budgetLeft()) {
-          x100OrgNames.foreach(n => { sfx100org(n) = SkippedBudget }); flush()
-        } else {
-          cloneDocsOrganic(orgDir, 100)
+      if (scaleProbe && names.nonEmpty) measureBlock(b.tag) {
+        if (!budgetLeft()) { names.foreach(sink(_) = SkippedBudget); flush() }
+        else {
+          cloneTables(b.dir, b.copies, b.organic, withTrade = names.exists(tradeQueries))
           val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_X100_PARTITIONS", "256"))
-          try x100OrgNames.foreach { n =>
-            probeOrSkip(n, sfx100org)(
-              runPinnedRow(n, orgDir, ceilingSec, "x100organic",
-                x100OrgExpected))
+          spark.conf.set("spark.sql.shuffle.partitions", b.partitions.toString)
+          // try/finally: a probe that throws must not leak the scaled
+          // partition count into every later measurement in this JVM.
+          try names.foreach { n =>
+            // A probe past the global budget records -3.0, never silence.
+            sink(n) = if (!budgetLeft()) SkippedBudget else b.ceilingSec match {
+              case None => run(n, SparkEntry.queries(n), b.dir)
+              case Some(ceiling) =>
+                val expected = b.expected.get(n)
+                val (best, suspect) = pinnedRow(ceiling, expected, () => budgetLeft())(
+                  () => runCeiling(n, b.dir, ceiling, b.tag))
+                if (suspect) {
+                  loadSuspect += n
+                  System.err.println(
+                    f"[bench] ${b.tag} LOAD-SUSPECT $n: min $best%.1f s > 3x pinned ${expected.get}%.1f s")
+                }
+                best
+            }
+            flush()
           }
           finally spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
         }
       }
-
-    // ---- sf_x1000 probe (see the trimmed-list rationale at
-    // x1000Names above): under a budget squeeze this is the block
-    // that sacrifices, and every row here carries pinned expected
-    // values plus r11 official/rehearsal records.
-    if (scaleProbe && x1000Probe && x1000Names.nonEmpty) measureBlock("x1000") {
-      val x1000Dir = sys.env.getOrElse("SPARK_GRAFT_X1000_DIR", "/tmp/graft_sfx1000")
-      val ceilingSec =
-        // ~10× the ×100 ceiling's headroom logic: the heaviest linear
-        // query here (line_dedup, ~47 s official) projects well under
-        // it; 300 s flags anything super-linear by >5× while
-        // tolerating a loaded harness.
-        sys.env.getOrElse("SPARK_GRAFT_X1000_CEILING_SEC", "300").toInt
-      if (!budgetLeft()) { x1000Names.foreach(n => { sfx1000(n) = SkippedBudget }); flush() }
-      else {
-        cloneTables(x1000Dir, 1000)
-        val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_X1000_PARTITIONS", "512"))
-        try x1000Names.foreach { n =>
-          probeOrSkip(n, sfx1000)(
-            runPinnedRow(n, x1000Dir, ceilingSec, "x1000", x1000Expected))
-        }
-        finally spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
-      }
     }
 
-    // ---- ORGANIC ×1000 — dead last: the heaviest organic rows
-    // sacrifice before any established block.
-    val x1000OrgNames = knownProbes(
-      Seq("line_dedup", "naive_bayes_score"), "x1000organic", sfx1000org)
-    if (scaleProbe && organicProbe && x1000OrgNames.nonEmpty)
-      measureBlock("x1000organic") {
-        val orgDir = sys.env.getOrElse("SPARK_GRAFT_X1000ORG_DIR",
-          "/tmp/graft_sfx1000organic")
-        val ceilingSec = sys.env.getOrElse(
-          "SPARK_GRAFT_X1000ORG_CEILING_SEC", "300").toInt
-        if (!budgetLeft()) {
-          x1000OrgNames.foreach(n => { sfx1000org(n) = SkippedBudget }); flush()
-        } else {
-          cloneDocsOrganic(orgDir, 1000)
-          val basePartitions = spark.conf.get("spark.sql.shuffle.partitions")
-          spark.conf.set("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_X1000_PARTITIONS", "512"))
-          try x1000OrgNames.foreach { n =>
-            probeOrSkip(n, sfx1000org)(
-              runPinnedRow(n, orgDir, ceilingSec, "x1000organic",
-                x1000OrgExpected))
-          }
-          finally spark.conf.set("spark.sql.shuffle.partitions", basePartitions)
-        }
-      }
-
-    val stats = headlineSamples.toSeq.map { case (n, ss) => n -> medMin(ss) }
-    val results = stats.map { case (n, (med, _)) => n -> med }
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val totalMin = stats.map(_._2._2).filter(_ >= 0).sum
-    val loadEnd = loadAvg()
-    val json = flush(complete = true)
+    val (json, h) = flush(complete = true)
     println(json)
-    // Compact headline AFTER the full JSON: the full line above runs
-    // to ~10 KB and a bounded tail capture can truncate it mid-line
-    // (both BENCH_r04 and r05 arrived with "parsed": null). Any tail
-    // window that keeps the last line gets a complete, parseable
-    // summary.
-    // Top-10 slowest headline queries as their own compact line:
-    // BENCH_r07's tail truncated the full per-query map, leaving the
-    // judge no way to localize a regression from the captured log —
-    // this line keeps the per-query evidence for exactly the queries
-    // a regression would move, inside any tail window.
-    val top10 = results.sortBy(-_._2).take(10)
-      .map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    // Compact lines AFTER the ~10 KB full JSON, so any tail capture
+    // that keeps the last lines gets parseable per-query evidence for
+    // the queries a regression would move and a complete summary.
+    val top10 = jsonPairs(h.med.sortBy(-_._2).take(10))
     println(
       f"""{"metric":"top10_slowest","unit":"sec","queries":$top10,"sf":"$sfDir"}""")
     println(
-      f"""{"metric":"total_headline","value":$total%.3f,"unit":"sec","value_min":$totalMin%.3f,"load_avg_start":$loadStart%.2f,"load_avg_end":$loadEnd%.2f,"cpus":$cpus,"n_queries":${results.size},"sf":"$sfDir"}""")
+      f"""{"metric":"total_headline","value":${h.total}%.3f,"unit":"sec","value_min":${h.totalMin}%.3f,"load_avg_start":$loadStart%.2f,"load_avg_end":${loadAvg()}%.2f,"cpus":$cpus,"n_queries":${h.med.size},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

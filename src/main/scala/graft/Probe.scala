@@ -26,15 +26,6 @@ object Probe {
       })
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    def release(): Unit = {
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.valuesIterator
-        .foreach(_.unpersist(blocking = true))
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("graft_stream_"))
-        .foreach(t => spark.catalog.dropTempView(t.name))
-      System.gc()
-    }
     names.foreach { n =>
       SparkEntry.queries.get(n) match {
         case None => System.err.println(s"[probe] unknown query: $n")
@@ -45,7 +36,7 @@ object Probe {
               org.apache.spark.sql.execution.FormattedMode))
           var i = 0
           while (i < samples) {
-            release()
+            Bench.release(spark)
             spark.sparkContext.setJobDescription(s"probe:$n#$i")
             val t0 = System.nanoTime()
             fn(spark, sfDir).write.format("noop").mode("overwrite").save()
